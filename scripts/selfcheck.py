@@ -21,7 +21,7 @@ import duckdb
 import pandas as pd
 
 import __spark_entry__ as entrymod
-from spark_streaming_stream_analyzer_spark.session import get_spark
+from spark_streaming_stream_analyzer_spark.session import get_spark, spark_cpus
 from spark_streaming_stream_analyzer_spark.sources.tables import TABLE_NAMES
 
 
@@ -65,9 +65,8 @@ def main() -> int:
         # leak into queries(); sources/tables.py must self-provision).
         from pyspark.sql import SparkSession
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master(f"local[{spark_cpus()}]")
             .appName("vanilla-selfcheck")
             .config("spark.ui.enabled", "false")
             .getOrCreate()

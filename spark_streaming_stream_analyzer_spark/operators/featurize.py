@@ -264,8 +264,9 @@ def approx_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # user-hash) DISTINCT — bounded by |types| x |users|, i.e.
         # user-dimension-sized, not event-fact-sized (at 100 TB of
         # events with ~1e9 users x 16 B this is ~10s of GB across the
-        # cluster, executor-local MEMORY_AND_DISK = spill-safe; see
-        # tables.materialize_once for the executor-loss trade).
+        # cluster, executor-local MEMORY_AND_DISK = spill-safe; the
+        # truncated lineage means an executor loss retries the query
+        # instead of recomputing one partition).
         .localCheckpoint(eager=False)
     )
     wk = Window.partitionBy("t").orderBy("h")

@@ -1086,8 +1086,9 @@ def rec_copurchase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # become a partitioned staging write (or the three consumers
         # must re-scan); the single-materialization-vs-3-scans trade
         # flips only when executor storage cannot hold ~1/6 of the
-        # fact. See tables.materialize_once for the fault-tolerance
-        # caveat shared by every checkpoint site.
+        # fact. As at every localCheckpoint site, the lineage is
+        # truncated: an executor loss retries the whole query instead
+        # of recomputing one partition.
         .localCheckpoint(eager=False)
     )
     od = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")

@@ -16,13 +16,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def spark_cpus() -> int:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` when set, else the
+    CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "spark_streaming_stream_analyzer_spark",
     *,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

@@ -280,27 +280,6 @@ def bcast_gated(df: DataFrame, sf_dir: str, table: str = "documents"):
     return df
 
 
-#: MATERIALIZATION POLICY (the one central caveat — ADVICE r13).
-#: Operators materialize a multi-consumer subtree with
-#: ``localCheckpoint(eager=False)``: blocks land in executor-local
-#: storage at the default MEMORY_AND_DISK level (spill-safe for memory
-#: pressure) and the lineage is TRUNCATED. On a single host that is
-#: free insurance; on a real cluster an executor loss (preemption,
-#: dynamic allocation) makes the truncated lineage unrecomputable and
-#: the QUERY fails and retries from scratch instead of recomputing one
-#: partition. That trade is sound for these bounded-latency batch
-#: queries (a retry costs one query, not a pipeline), but a long
-#: multi-query job on flaky infrastructure should swap this helper to
-#: ``persist(StorageLevel.MEMORY_AND_DISK_2)`` or a reliable
-#: ``checkpoint()`` — one edit point, every routed site follows.
-def materialize_once(df: DataFrame) -> DataFrame:
-    """Materialize a subtree consumed by 2+ downstream branches (the
-    rescan rule, round 13): executor-local, lazy (builds inside the
-    first consuming job), lineage-truncating. See the policy note
-    above for the cluster fault-tolerance trade."""
-    return df.localCheckpoint(eager=False)
-
-
 def load_documents_keyed(
     spark: SparkSession, sf_dir: str, cpu: bool = True
 ) -> DataFrame:

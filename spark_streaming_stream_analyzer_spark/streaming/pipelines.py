@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.stats import stat_aggs, stats_oracle_sql
+from ..session import spark_cpus
 from ..sources.tables import (
     PARTITION_KEY_MAX_BYTES,
     load_table,
@@ -251,10 +252,8 @@ def _run_to_memory(
     """
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(state_partitions) if state_partitions else cpus,
+        "spark.sql.shuffle.partitions", str(state_partitions or spark_cpus())
     )
     own_ckpt: list[str] = []
     try:
@@ -952,7 +951,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(_pystream_source())
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
+        "spark.sql.shuffle.partitions", str(spark_cpus())
     )
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = _tracked_tmp_dir("sgs_pys")
@@ -1063,7 +1062,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = stream.groupBy("event_type").agg(F.count("*").alias("n"))
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
+        "spark.sql.shuffle.partitions", str(spark_cpus())
     )
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = _tracked_tmp_dir("sgs_prog")
@@ -1239,7 +1238,7 @@ def _run_foreachbatch(stream: DataFrame, fn, tag: str) -> None:
     spark = stream.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
+        "spark.sql.shuffle.partitions", str(spark_cpus())
     )
     ckpt = _tracked_tmp_dir(tag)
     try:

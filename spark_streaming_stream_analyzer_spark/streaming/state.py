@@ -47,6 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import spark_cpus
+
 #: Squared-cents partial sums overflow int64 around ~9e6 rows/key for
 #: 1e4-magnitude values, so ``sumsq`` is carried as two base-10^18
 #: limbs (hi·10^18 + lo) — the streaming-state equivalent of
@@ -475,7 +477,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _tracked_tmp_dir("sgs_hb")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
+        "spark.sql.shuffle.partitions", str(spark_cpus())
     )
     try:
         q = (

@@ -388,7 +388,7 @@ def test_variant_coercion_matrix_noninteger_targets(spark):
 
 
 # ----------------------------------------------------------------------
-# TPCHADV boundary pins (round-13 second probe, scripts/tpchadv.py):
+# TPCHADV boundary pins (round-13 second probe):
 # the relational tier has NO events-style ingest contract, and the
 # probe measured the consequences — 25 of 42 money/date-reading
 # queries fail or diverge under hostile magnitudes/dates. The classes:
@@ -401,13 +401,11 @@ def test_variant_coercion_matrix_noninteger_targets(spark):
 #     DuckDB's median ignores it), >4-digit-year date RENDERING
 #     (Spark '+10000-01-30' vs DuckDB '10000-01-30'), huge-double
 #     bucket casts (z-order), Benford digit extraction on NaN/Inf.
-# Resolution is SCHEDULED, not landed: the lockstep contract changes
-# 65 oracle texts — more than _PLANNED_NEXT_FRONT can hold under the
-# blast-radius rule with the round-13 front already committed — so it
-# lands at round 14's START with a changed-surface front (plan in
-# NOTES_r13; README verified-boundaries carries the interim
-# precondition). These pins hold the measured behavior in place until
-# then; the contract round REPLACES the divergence pins with parity.
+# Resolution is PENDING, not landed: the lockstep contract changes
+# 65 oracle texts in one step (README verified-boundaries carries the
+# interim precondition). These pins hold the measured behavior in
+# place until then; the contract change REPLACES the divergence pins
+# with parity.
 # ----------------------------------------------------------------------
 
 

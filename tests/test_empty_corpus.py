@@ -437,7 +437,7 @@ def test_high_card_parity(spark, high_card_dir, name):
 #: ORDER BY ts tiebreak at once (lag/lead, asof joins, SCD2, OHLC,
 #: keep-rules), collapses every session/window/grid to a single
 #: bucket, and makes ALL rows RANGE-frame peers. Representatives per
-#: mechanism (full sweep: scripts/sweep_all.py TIES):
+#: mechanism:
 TIED_CLOCK_PARITY = [
     "ts_gap_stats",          # every gap 0 via (ts, event_id) tiebreak
     "join_asof_forward",     # massive tie-sets resolved by event_id

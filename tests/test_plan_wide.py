@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from spark_streaming_stream_analyzer_spark import registry
 
 #: Queries that execute eagerly inside their builder (streaming runs,
@@ -46,26 +48,31 @@ ARROW_PYTHON_OK = {
 }
 
 
-def test_no_rowwise_python_anywhere(spark, sf_dir):
-    for name, fn in registry.QUERIES.items():
-        if name in EAGER:
-            continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture(scope="module")
+def plans(spark, sf_dir) -> dict[str, str]:
+    """Executed-plan text of every non-eager query, built once and
+    shared by both checks (building all of them is most of the cost)."""
+    return {
+        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in registry.QUERIES.items()
+        if name not in EAGER
+    }
+
+
+def test_no_rowwise_python_anywhere(plans):
+    for name, plan in plans.items():
         assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
         if name not in ARROW_PYTHON_OK:
             for node in ("MapInPandas", "AggregateInPandas", "ArrowEvalPython"):
                 assert node not in plan, f"{name}: unexpected Python op {node}"
 
 
-def test_all_parquet_scans_prune_columns(spark, sf_dir):
+def test_all_parquet_scans_prune_columns(plans):
     # every scan must read a proper subset of its table's columns when
     # the query touches a proper subset; spot the widest offenders by
     # asserting no scan reads more than 8 columns (widest fixture need:
     # q1's 7 lineitem columns + none read all 11)
-    for name, fn in registry.QUERIES.items():
-        if name in EAGER:
-            continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in plans.items():
         for m in re.finditer(r"ReadSchema: struct<([^>\n]*)", plan):
             ncols = len([c for c in m.group(1).split(",") if c])
             assert ncols <= 8, f"{name}: scan reads {ncols} columns"

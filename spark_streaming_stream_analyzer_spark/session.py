@@ -6,7 +6,9 @@ settings are what we would ship on a multi-executor cluster: AQE on
 (runtime re-planning, skew-join splitting, partition coalescing),
 shuffle partitions sized to the parallelism, Arrow enabled for any
 Pandas-UDF path, UTC session timezone for deterministic timestamp
-semantics against the DuckDB oracle.
+semantics against the DuckDB oracle. Streams run on a
+``stream_session`` child, which carries its own copy of the stream
+settings.
 """
 
 from __future__ import annotations
@@ -21,6 +23,18 @@ def spark_cpus() -> int:
     CPUs this process may run on."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` for one stream: same SparkContext, own SQL
+    conf, so stream settings never touch the caller's session. Shuffle
+    partitions (the state-store count, fixed at a checkpoint's first
+    run) follow the core count; nanosAsLong and UTC as in ``get_spark``."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", str(spark_cpus()))
+    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    child.conf.set("spark.sql.session.timeZone", "UTC")
+    return child
 
 
 def get_spark(

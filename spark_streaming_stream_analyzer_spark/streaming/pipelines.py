@@ -38,33 +38,15 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..operators.stats import stat_aggs, stats_oracle_sql
-from ..session import spark_cpus
+from ..operators.stats import STAT_COLS, running_stats, stats_oracle_sql
+from ..session import stream_session
 from ..sources.tables import (
     PARTITION_KEY_MAX_BYTES,
     load_table,
     partitionable_key,
     ts_micros,
     ts_timestamp,
-)
-
-# Schema of the OLDER events fixture vintage (parquet TIMESTAMP(NANOS)
-# read as a bigint of epoch-nanos under ``nanosAsLong``). Kept for
-# tests that synthesize long-ts event files; the streaming sources
-# below no longer assume it — they infer the schema from the actual
-# parquet footer, so a native timestamp[us] fixture streams with a
-# real timestamp column.
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # ns since epoch (nanosAsLong)
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
 )
 
 
@@ -168,14 +150,14 @@ def events_file_stream(
     sweep: six kernels red from this one cause). ``batch_per_pass``
     sets maxFilesPerTrigger to the per-pass part count so ops with
     per-BATCH output contracts (progress counters, per-batch folds)
-    see one batch per full pass regardless of the physical layout."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(path).schema
+    see one batch per full pass regardless of the physical layout.
+    The stream lives on its own ``stream_session`` child of ``spark``."""
+    child = stream_session(spark)
+    schema = child.read.parquet(path).schema
     parts = _parquet_parts(path)
     path = _stage_stream_dir(*(parts * copies), force_order=len(parts) > 1)
     stream = (
-        spark.readStream.schema(schema)
+        child.readStream.schema(schema)
         .option("maxFilesPerTrigger", len(parts) if batch_per_pass else 1)
         .parquet(path)
     )
@@ -228,48 +210,29 @@ def _run_to_memory(
     df: DataFrame,
     *,
     output_mode: str,
-    with_checkpoint: bool = True,
     checkpoint_dir: str | None = None,
     trigger: dict | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink;
-    return the sink table as a batch DataFrame.
-
-    Stateful streaming partitions are pinned to the core count for the
-    run (a caller session may default to 200 — at fixture scale that is
-    200 state-store instances and Python workers per micro-batch for a
-    handful of keys; the state-store count is fixed at the FIRST run of
-    a checkpoint, which is also why it must be set before start).
-    ``state_partitions`` overrides that pin for callers whose state
-    keyspace is tiny and whose provider pays a per-instance open/commit
-    cost (RocksDB: ~0.3 s per store instance per micro-batch — sizing
-    state partitions to the keyspace is the same call an operator makes
-    on a real cluster, where `shuffle.partitions` for a 6-key stateful
-    agg is set to O(keys), not O(cores)).
-    ``trigger`` defaults to availableNow; a processingTime trigger is
-    stopped after the source is drained (``processAllAvailable``).
+    return the sink table as a batch DataFrame on the stream's session.
+    Without ``checkpoint_dir`` a tracked tmp checkpoint is used and
+    removed once the query drains. ``trigger`` defaults to
+    availableNow; a processingTime trigger is stopped after the source
+    is drained (``processAllAvailable``).
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_partitions or spark_cpus())
-    )
-    own_ckpt: list[str] = []
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    own_ckpt = [] if checkpoint_dir else [_tracked_tmp_dir("sgs_ckpt")]
+    trigger = trigger or {"availableNow": True}
     try:
-        name = f"mem_{uuid.uuid4().hex[:12]}"
-        writer = (
-            df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir or own_ckpt[0])
+            .trigger(**trigger)
+            .start()
         )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        elif with_checkpoint:
-            ckpt = _tracked_tmp_dir("sgs_ckpt")
-            own_ckpt.append(ckpt)
-            writer = writer.option("checkpointLocation", ckpt)
-        if trigger is None:
-            trigger = {"availableNow": True}
-        q = writer.trigger(**trigger).start()
         if trigger.get("availableNow"):
             q.awaitTermination()
         else:
@@ -277,7 +240,6 @@ def _run_to_memory(
             q.stop()
             q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         # the memory sink holds the rows; a drained query's auto
         # checkpoint has no further reader
         _cleanup_tmp_dirs(own_ckpt)
@@ -286,7 +248,7 @@ def _run_to_memory(
 
 def stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming flagship: the reference's AverageCalculator as a
-    Structured Streaming job — same ``stat_aggs`` body as batch, state
+    Structured Streaming job — the batch ``running_stats`` body, state
     maintained by the engine, run to completion on the fixture stream.
 
     Emits the complete per-key result; equals the batch query on the
@@ -295,9 +257,7 @@ def stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet")
     )
-    stats = events.groupBy(
-        F.col("event_type").cast("string").alias("readTag_id")
-    ).agg(*stat_aggs("value"))
+    stats = running_stats(events, "event_type", "value")
     return _run_to_memory(stats, output_mode="complete")
 
 
@@ -345,14 +305,15 @@ HAVING date_trunc('day', min(ts)) + INTERVAL 1 DAY
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–static join (SURVEY.md §2.2): the event stream enriched
     with the static customer dimension, then aggregated per market
-    segment. The static side is a plain batch DataFrame — Structured
+    segment. The static side is a plain batch DataFrame, read on the
+    stream's session (``load_table`` sets conf) — Structured
     Streaming re-plans it per micro-batch, and Catalyst broadcasts it
     exactly as in batch, so the streaming fact flow never shuffles for
     the enrich step. Unmatched events (user ids outside the customer
     table) are dropped by the inner join, same as the SQL oracle.
     """
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    cust = load_table(spark, sf_dir, "customer").select(
+    cust = load_table(events.sparkSession, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     joined = events.join(
@@ -614,9 +575,10 @@ def stream_batch_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     # readable files and the per-batch fold had nothing to concat)
     parts = _parquet_parts(docs_path)
     src = _stage_stream_dir(*(parts * 2), force_order=len(parts) > 1)
-    docs_schema = spark.read.parquet(docs_path).schema
+    child = stream_session(spark)
+    docs_schema = child.read.parquet(docs_path).schema
     stream = (
-        spark.readStream.schema(docs_schema)
+        child.readStream.schema(docs_schema)
         .option("maxFilesPerTrigger", len(parts))
         .parquet(src)
     )
@@ -948,16 +910,13 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time as _time
 
-    spark.dataSource.register(_pystream_source())
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark_cpus())
-    )
+    child = stream_session(spark)
+    child.dataSource.register(_pystream_source())
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = _tracked_tmp_dir("sgs_pys")
     total = PYSTREAM_BATCHES * PYSTREAM_ROWS
     try:
-        stream = spark.readStream.format("pystream_readings").load()
+        stream = child.readStream.format("pystream_readings").load()
         agg = stream.groupBy("tag").agg(
             F.count("*").alias("n"),
             F.sum(F.round(F.col("reading") * 100).cast("long")).alias("sum_cents"),
@@ -975,7 +934,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             deadline = _time.time() + 120
             while _time.time() < deadline:
-                got = spark.table(name).agg(F.sum("n")).collect()[0][0]
+                got = child.table(name).agg(F.sum("n")).collect()[0][0]
                 if got == total:
                     break
                 _time.sleep(0.5)
@@ -984,11 +943,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
             q.awaitTermination()
-        pdf = spark.table(name).toPandas()
-        return spark.createDataFrame(pdf, schema=spark.table(name).schema)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         _cleanup_tmp_dirs([ckpt])
+    return child.table(name)
 
 
 STREAM_PYSRC_SQL = f"""
@@ -1060,10 +1017,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_per_pass=True,
     )
     counted = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark_cpus())
-    )
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = _tracked_tmp_dir("sgs_prog")
     try:
@@ -1082,7 +1035,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             if int(p["numInputRows"]) > 0
         ]
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         _cleanup_tmp_dirs([ckpt])
     return spark.createDataFrame(
         rows, schema="batch_id long, num_input_rows long"
@@ -1200,46 +1152,30 @@ def stream_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("j.readTag_id").alias("readTag_id"),
         F.col("j.readValue").cast("double").alias("v"),
     )
-    stats = parsed.groupBy("readTag_id").agg(*stat_aggs("v"))
-    d4 = lambda c: F.col(c).cast("decimal(38,4)")  # noqa: E731
+    stats = running_stats(parsed, "readTag_id", "v")
+    record = kafka_record(
+        stats.select(
+            "readTag_id",
+            *(F.col(c).cast("decimal(38,4)").alias(c) for c in STAT_COLS),
+        )
+    )
     # An untaggable record (NULL readTag_id — the JSON synthesis
     # propagates a NULL event_type through the whole doc) renders NO
     # value: the oracle's `||` concatenation NULLs the record string,
     # while to_json would silently DROP the null fields and emit a
     # partial record (round-8 NULL-keys sweep) — gate it explicitly.
-    record = stats.select(
-        F.col("readTag_id").alias("key"),
-        F.when(
-            F.col("readTag_id").isNotNull(),
-            F.to_json(
-                F.struct(
-                    F.col("readTag_id"),
-                    d4("summer").alias("summer"),
-                    d4("counter").alias("counter"),
-                    d4("sumsqr").alias("sumsqr"),
-                    d4("bestmin").alias("bestmin"),
-                    d4("bestmax").alias("bestmax"),
-                    d4("mean").alias("mean"),
-                    d4("var").alias("var"),
-                )
-            ),
-        ).alias("value"),
+    record = record.select(
+        "key", F.when(F.col("key").isNotNull(), F.col("value")).alias("value")
     )
     return _run_to_memory(record, output_mode="complete")
 
 
 def _run_foreachbatch(stream: DataFrame, fn, tag: str) -> None:
     """Drain a file-backed stream through ``foreachBatch(fn)`` with the
-    shared runner discipline: shuffle partitions pinned to the harness
-    core count (and restored after), a tracked checkpoint dir,
-    availableNow trigger, blocking awaitTermination, checkpoint
-    cleanup. Factored from eight identical inline copies — one edit
-    point for the runner semantics."""
-    spark = stream.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark_cpus())
-    )
+    shared runner discipline: a tracked checkpoint dir, availableNow
+    trigger, blocking awaitTermination, checkpoint cleanup. Factored
+    from eight identical inline copies — one edit point for the runner
+    semantics."""
     ckpt = _tracked_tmp_dir(tag)
     try:
         q = (
@@ -1250,7 +1186,6 @@ def _run_foreachbatch(stream: DataFrame, fn, tag: str) -> None:
         )
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         _cleanup_tmp_dirs([ckpt])
 
 
@@ -1654,15 +1589,14 @@ def stream_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.exact import cents
 
     path = os.path.join(sf_dir, "orders.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(path).schema
+    child = stream_session(spark)
+    schema = child.read.parquet(path).schema
     # parts-aware staging (round-10 MULTIFILE sweep): a multi-part
     # orders directory streams one part per batch — the frontier fold
     # is a monotone union, so batching and order are both immaterial
     _sky_parts = _parquet_parts(path)
     stream = (
-        spark.readStream.schema(schema)
+        child.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(_stage_stream_dir(*_sky_parts))
     )

@@ -25,8 +25,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.stats import stat_aggs, stats_oracle_sql
-from .pipelines import EVENTS_SCHEMA, _run_to_memory, events_file_stream
+from ..operators.stats import running_stats, stats_oracle_sql
+from ..session import stream_session
+from .pipelines import _run_to_memory, events_file_stream
 
 
 def trigger_microbatch_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -36,11 +37,8 @@ def trigger_microbatch_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the batch answer.
     """
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    stats = events.groupBy(
-        F.col("event_type").cast("string").alias("readTag_id")
-    ).agg(*stat_aggs("value"))
     return _run_to_memory(
-        stats,
+        running_stats(events, "event_type", "value"),
         output_mode="complete",
         trigger={"processingTime": "2 seconds"},
     )
@@ -57,11 +55,11 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     its complete-mode output must equal the full-stream aggregate —
     i.e. per-key state really was restored, not recomputed.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from ..sources.tables import clean_measurements
 
+    child = stream_session(spark)
     events = clean_measurements(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        child.read.parquet(os.path.join(sf_dir, "events.parquet"))
     )
 
     run_id = uuid.uuid4().hex[:12]
@@ -87,30 +85,28 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_half("half_a", F.col("event_id") % 2 == 0)
 
         def pipeline() -> DataFrame:
+            # the staged halves carry the staged frame's own schema
             stream = (
-                spark.readStream.schema(EVENTS_SCHEMA)
+                child.readStream.schema(events.schema)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src_dir)
             )
-            return stream.groupBy(
-                F.col("event_type").cast("string").alias("readTag_id")
-            ).agg(*stat_aggs("value"))
+            return running_stats(stream, "event_type", "value")
 
         _run_to_memory(
             pipeline(), output_mode="complete", checkpoint_dir=ckpt_dir
         )
         # second half arrives while the query is DOWN
         stage_half("half_b", F.col("event_id") % 2 == 1)
+        # the memory sink holds the rows once the query drains
         out = _run_to_memory(
             pipeline(), output_mode="complete", checkpoint_dir=ckpt_dir
         )
-        # materialize before the staged dirs are removed
-        pdf = out.toPandas()
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
         shutil.rmtree(stage_dir, ignore_errors=True)
         shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=out.schema)
+    return out
 
 
 CKPT_STATE_SQL = stats_oracle_sql("events", "event_type", "value")

@@ -36,7 +36,6 @@ path keeps per-batch Python overhead O(batch), not O(row).
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -47,7 +46,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import spark_cpus
 
 #: Squared-cents partial sums overflow int64 around ~9e6 rows/key for
 #: 1e4-magnitude values, so ``sumsq`` is carried as two base-10^18
@@ -196,31 +194,37 @@ def exact_state_stats(events: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def stream_stats_exact_state(
-    spark: SparkSession, sf_dir: str, *, state_partitions: int | None = None
-) -> DataFrame:
-    """Driver-facing query: run the exact-parity stateful op over the
-    fixture stream to completion; keep each key's final emission
-    (highest counter). Oracle-checked fields are the deterministic
-    ones; ``delta`` is dropped here (order-dependent parity telemetry,
-    bug B4 — see module docstring)."""
-    from .pipelines import events_file_stream, _run_to_memory
-
-    events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    out = exact_state_stats(events, "event_type")
-    mem = _run_to_memory(
-        out, output_mode="update", state_partitions=state_partitions
-    )
+def _final_emission(mem: DataFrame) -> DataFrame:
+    """Each key's final emission (highest counter: data emissions
+    strictly grow it) from an update-mode sink, without ``delta``
+    (order-dependent parity telemetry, bug B4 — see module docstring)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("readTag_id").orderBy(F.col("counter").desc())
     return (
         mem.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(
-            "readTag_id", "summer", "counter", "sumsqr",
-            "bestmin", "bestmax", "mean", "m2", "var",
-        )
+        .drop("rn", "delta")
+    )
+
+
+def _exact_state_final(events: DataFrame) -> DataFrame:
+    """Run the exact-parity stateful op over an events stream to
+    completion; keep each key's final emission."""
+    from .pipelines import _run_to_memory
+
+    out = exact_state_stats(events, "event_type")
+    return _final_emission(_run_to_memory(out, output_mode="update"))
+
+
+def stream_stats_exact_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-facing query: the exact-parity stateful op over the
+    fixture stream, each key's final emission. Oracle-checked fields
+    are the deterministic ones."""
+    from .pipelines import events_file_stream
+
+    return _exact_state_final(
+        events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
 
 
@@ -362,16 +366,8 @@ def stream_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     else:
-        out = exact_state_stats(events, "event_type").drop("delta")
-    mem = _run_to_memory(out, output_mode="update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("readTag_id").orderBy(F.col("counter").desc())
-    return (
-        mem.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+        out = exact_state_stats(events, "event_type")
+    return _final_emission(_run_to_memory(out, output_mode="update"))
 
 
 STREAM_STATS_TWS_SQL = STREAM_STATS_EXACT_SQL
@@ -437,18 +433,13 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     many heartbeats fired, so the batch oracle applies unchanged
     (``delta``, the order-dependent telemetry, is excluded)."""
     import time as _time
-    import uuid as _uuid
 
-    from pyspark.sql import Window
-
+    from ..sources.tables import clean_measurements
     from .pipelines import _cleanup_tmp_dirs, _tracked_tmp_dir, events_file_stream
 
-    # conf BEFORE the first batch read: an events fixture of the
-    # TIMESTAMP(NANOS) vintage would otherwise fail schema inference
-    # here in a vanilla session (every sibling entry sets it first;
-    # events_file_stream would set it one line too late)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from ..sources.tables import clean_measurements
+    events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    # the census reads on the stream's session (nanosAsLong, UTC)
+    child = events.sparkSession
 
     # Per-key EXPECTED FINAL COUNTER through the SAME ingest contract
     # as the stream it polls (a type living only on clock-invalid rows
@@ -465,20 +456,15 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected = {
         r["readTag_id"]: r["exp_counter"]
         for r in clean_measurements(
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+            child.read.parquet(os.path.join(sf_dir, "events.parquet"))
         )
         .groupBy(F.col("event_type").cast("string").alias("readTag_id"))
         .agg(F.count("value").cast("double").alias("exp_counter"))
         .collect()
     }
-    events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     out = exact_state_stats_heartbeat(events, "event_type")
-    name = f"hb_{_uuid.uuid4().hex[:8]}"
+    name = f"hb_{uuid.uuid4().hex[:8]}"
     ckpt = _tracked_tmp_dir("sgs_hb")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark_cpus())
-    )
     try:
         q = (
             out.writeStream.format("memory")
@@ -498,7 +484,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         while _time.time() < deadline:
             try:
                 per_key = (
-                    spark.table(name)
+                    child.table(name)
                     .groupBy("readTag_id", "counter")
                     .count()
                     .collect()
@@ -527,18 +513,8 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "at their final counter)"
             )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         _cleanup_tmp_dirs([ckpt])
-    w = Window.partitionBy("readTag_id").orderBy(F.col("counter").desc())
-    return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "readTag_id", "summer", "counter", "sumsqr",
-            "bestmin", "bestmax", "mean", "m2", "var",
-        )
-    )
+    return _final_emission(child.table(name))
 
 
 STREAM_STATS_HEARTBEAT_SQL = STREAM_STATS_EXACT_SQL
@@ -774,8 +750,8 @@ def stream_stats_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     in RocksDB with changelog checkpointing, so key cardinality is
     bounded by disk, not executor memory. Same state algebra, same
     oracle as ``stream_stats_exact_state``; what this query registers
-    is that the OPERATOR IS PROVIDER-AGNOSTIC — the provider conf is
-    scoped to this query (saved/restored), and the emitted rows are
+    is that the OPERATOR IS PROVIDER-AGNOSTIC — the provider is set on
+    this stream's own child session, and the emitted rows are
     identical to the default-provider run.
 
     State partitions are sized to the keyspace (4 partitions for a
@@ -785,24 +761,15 @@ def stream_stats_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.01 vs ~3 s with right-sized state partitions, identical
     rows. On a real cluster the same rule applies: stateful-agg shuffle
     partitions scale with key cardinality and state size, not cores.
+    Both are set before the query starts; they are fixed at a
+    checkpoint's first run."""
+    from .pipelines import events_file_stream
 
-    The memory sink is fully materialized before the conf restore, so
-    the returned frame is provider-independent by the time the driver
-    collects it."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        out = stream_stats_exact_state(spark, sf_dir, state_partitions=4)
-        # force the streaming query (and its RocksDB state) to finish
-        # while the provider conf is still in effect
-        pdf = out.toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return spark.createDataFrame(pdf, schema=out.schema)
+    events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    child_conf = events.sparkSession.conf
+    child_conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
+    child_conf.set("spark.sql.shuffle.partitions", "4")
+    return _exact_state_final(events)
 
 
 STREAM_STATS_ROCKSDB_SQL = STREAM_STATS_EXACT_SQL

@@ -25,6 +25,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from spark_streaming_stream_analyzer_spark.session import stream_session
 from spark_streaming_stream_analyzer_spark.sources.tables import (
     clean_measurements,
 )
@@ -74,11 +75,12 @@ def _ingested_rows(query) -> int:
 def test_restart_resumes_complete_mode_aggregate(spark, split_corpus, tmp_path):
     src, add_second_half, first_rows, second_rows = split_corpus
     ckpt = str(tmp_path / "ckpt")
-    schema = spark.read.parquet(src).schema
+    child = stream_session(spark)
+    schema = child.read.parquet(src).schema
 
     def pipeline():
         stream = (
-            spark.readStream.schema(schema)
+            child.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -117,7 +119,7 @@ def test_restart_resumes_complete_mode_aggregate(spark, split_corpus, tmp_path):
 
     final = {
         r["event_type"]: (r["n"], r["sum_c"])
-        for r in spark.table(n2).collect()
+        for r in child.table(n2).collect()
     }
     ev = clean_measurements(spark.read.parquet(src))
     expected = {
@@ -141,11 +143,12 @@ def test_restart_resumes_grouped_state_kernel(spark, split_corpus, tmp_path):
     import pandas as pd
 
     src, add_second_half, first_rows, second_rows = split_corpus
-    schema = spark.read.parquet(src).schema
+    child = stream_session(spark)
+    schema = child.read.parquet(src).schema
 
     def run(ckpt: str, emissions: list) -> object:
         stream = (
-            spark.readStream.schema(schema)
+            child.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )

@@ -5,9 +5,14 @@ contract. No Spark session: importing the registry only registers.
 registrations; a mistyped hand-assigned key would name no query, and
 ``scripts/selfcheck.py`` (which walks ``queries()``) would never run
 that oracle.
+
+The streaming runners leave the caller's session conf alone: each
+stream runs on its own ``session.stream_session`` child.
 """
 
 from __future__ import annotations
+
+import pathlib
 
 import __spark_entry__ as entrymod
 from spark_streaming_stream_analyzer_spark import registry
@@ -18,3 +23,15 @@ def test_oracles_name_registered_queries_and_entry_reexports_the_maps():
     assert not orphans, f"ORACLES keys with no registered query: {orphans}"
     assert list(entrymod.queries().items()) == list(registry.QUERIES.items())
     assert list(entrymod.oracle_sql().items()) == list(registry.ORACLES.items())
+
+
+def test_streaming_ops_write_no_caller_session_conf():
+    # ``spark`` is the caller-session parameter of every streaming op
+    pkg = pathlib.Path(registry.__file__).parent / "streaming"
+    hits = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in sorted(pkg.glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "spark.conf.set(" in line or "spark.conf.unset(" in line
+    ]
+    assert not hits, hits

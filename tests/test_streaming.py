@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from spark_streaming_stream_analyzer_spark.operators.stats import stat_aggs
 from spark_streaming_stream_analyzer_spark.sources.tables import load_table
 from spark_streaming_stream_analyzer_spark.streaming.pipelines import (
-    EVENTS_SCHEMA,
     _run_to_memory,
     events_file_stream,
     kafka_record,
@@ -164,9 +163,8 @@ def test_kafka_record_shape(spark, sf_dir):
 def test_rocksdb_state_store_matches_batch(spark, sf_dir):
     """The 100 TB state path: the same streaming aggregate under the
     RocksDB state store provider (large-key-cardinality state off the
-    JVM heap) must equal the batch answer. Run in an isolated session
-    so the provider conf doesn't leak into other tests."""
-    from pyspark.sql import SparkSession
+    JVM heap) must equal the batch answer. The provider is set on the
+    stream's own session, so it doesn't leak into other tests."""
     from pyspark.sql import functions as F
 
     from spark_streaming_stream_analyzer_spark.operators.stats import stat_aggs
@@ -176,26 +174,23 @@ def test_rocksdb_state_store_matches_batch(spark, sf_dir):
         events_file_stream,
     )
 
-    spark.conf.set(
+    ev = events_file_stream(spark, f"{sf_dir}/events.parquet")
+    ev.sparkSession.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    try:
-        ev = events_file_stream(spark, f"{sf_dir}/events.parquet")
-        streamed = _run_to_memory(
-            ev.groupBy(F.col("event_type").alias("readTag_id")).agg(
-                *stat_aggs("value")
-            ),
-            output_mode="complete",
-        ).collect()
-        batch = (
-            load_table(spark, sf_dir, "events")
-            .groupBy(F.col("event_type").alias("readTag_id"))
-            .agg(*stat_aggs("value"))
-            .collect()
-        )
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    streamed = _run_to_memory(
+        ev.groupBy(F.col("event_type").alias("readTag_id")).agg(
+            *stat_aggs("value")
+        ),
+        output_mode="complete",
+    ).collect()
+    batch = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.col("event_type").alias("readTag_id"))
+        .agg(*stat_aggs("value"))
+        .collect()
+    )
     assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
 
 
@@ -207,6 +202,7 @@ def test_heartbeat_reemits_idle_keys(spark, tmp_path):
 
     from pyspark.sql import types as T
 
+    from spark_streaming_stream_analyzer_spark.session import stream_session
     from spark_streaming_stream_analyzer_spark.streaming.state import (
         exact_state_stats_heartbeat,
     )
@@ -232,8 +228,9 @@ def test_heartbeat_reemits_idle_keys(spark, tmp_path):
         if part.name.endswith(".parquet"):
             os.link(part, stream_dir / f"f{n}.parquet")
             n += 1
+    child = stream_session(spark)
     stream = (
-        spark.readStream.schema(schema)
+        child.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir))
     )
@@ -250,18 +247,18 @@ def test_heartbeat_reemits_idle_keys(spark, tmp_path):
         # batch 1 ingests a+b; later idle batches fire the timers
         deadline = time.time() + 45
         while time.time() < deadline:
-            rows = spark.table("hb").groupBy("readTag_id").count().collect()
+            rows = child.table("hb").groupBy("readTag_id").count().collect()
             if rows and all(r["count"] >= 2 for r in rows) and len(rows) == 2:
                 break
             time.sleep(1)
         counts = {
             r["readTag_id"]: r["count"]
-            for r in spark.table("hb").groupBy("readTag_id").count().collect()
+            for r in child.table("hb").groupBy("readTag_id").count().collect()
         }
         assert set(counts) == {"a", "b"}
         assert all(c >= 2 for c in counts.values()), counts  # >=1 heartbeat
         # heartbeat rows carry the same (unchanged) statistics
-        vals = spark.table("hb").select("readTag_id", "summer", "counter").distinct().collect()
+        vals = child.table("hb").select("readTag_id", "summer", "counter").distinct().collect()
         assert len(vals) == 2
     finally:
         q.stop()

@@ -23,14 +23,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_streaming_stream_analyzer_spark import registry  # noqa: E402
 from spark_streaming_stream_analyzer_spark.operators.stats import running_stats  # noqa: E402
-from spark_streaming_stream_analyzer_spark.shipping import ensure_package_shipped  # noqa: E402
+from spark_streaming_stream_analyzer_spark.session import op_session  # noqa: E402
 from spark_streaming_stream_analyzer_spark.sources.tables import load_table  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-key running statistics over the events stream
     (batch form of the reference's KafkaStreamAverageCalculator job)."""
-    ensure_package_shipped(spark)
+    spark = op_session(spark)
     events = load_table(spark, "/root/testdata/sf0.001", "events")
     return running_stats(events, "user_id", "value")
 

@@ -62,7 +62,7 @@ def main() -> int:
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # Mirror the external driver's session: a bare builder with NO
         # repo conf (no AQE/Arrow/nanosAsLong/timezone assumptions may
-        # leak into queries(); sources/tables.py must self-provision).
+        # leak into queries(); the registry's op_session must provision them).
         from pyspark.sql import SparkSession
 
         spark = (

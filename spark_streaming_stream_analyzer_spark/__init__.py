@@ -14,7 +14,10 @@ Kafka-statistics job), re-expressed Spark-first:
 
 Layout:
     session.py    SparkSession builder tuned for local[32] test runs and
-                  cluster-scale defaults (AQE, shuffle partitions, Arrow).
+                  cluster-scale defaults (AQE, shuffle partitions, Arrow),
+                  and ``op_session``, the child session every op runs on.
+    registry.py   Every operator as a (spark, sf_dir) query plus its
+                  DuckDB oracle.
     sources/      Table loaders (parquet fixtures), Kafka/file stream
                   source builders.
     functions/    Column-expression packs: exact fixed-point money math,
@@ -22,8 +25,19 @@ Layout:
     operators/    The operator inventory from SURVEY.md §2 plus the
                   extended relational + LLM-data-pipeline surface.
     streaming/    Streaming pipelines incl. exact-parity stateful op.
-    plans/        Physical-plan inspection helpers (pushdown/broadcast
-                  assertions used by tests).
+
+Functions and classes of this package that run on Python workers (state
+updaters, grouped-map UDFs, Python data sources) are pickled by value,
+so a worker never imports the package from disk: that import fails
+whenever the driver's working directory is not the repo root. Code that
+runs on a worker therefore imports package names at module level, not
+inside the function body.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

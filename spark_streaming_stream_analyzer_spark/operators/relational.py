@@ -265,7 +265,8 @@ def join_asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate), orders per user are bounded, so the fan-out is modest and
     the max(struct) aggregation collapses it back with map-side combine.
     Tiebreak on o_orderkey makes ties deterministic.
-    `ts` arrives as bigint nanos (parquet NANOS) → convert to seconds.
+    ``ts_timestamp`` reads `ts` as a TIMESTAMP whatever the fixture
+    vintage (native timestamp[us], or bigint nanos in older fixtures).
     """
     ev_raw = load_table(spark, sf_dir, "events")
     ev = ev_raw.select(
@@ -1327,9 +1328,8 @@ def agg_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     inactivity gap, via Spark's native session_window aggregate.
 
     Session bounds are emitted as exact epoch-microsecond integers
-    (events.ts is parquet TIMESTAMP(NANOS) read as a nanos long) so the
-    comparison with the oracle's gaps-and-islands formulation is
-    integer-exact. session_end = last event + gap, Spark's definition.
+    (``unix_micros`` of the window bounds) so the comparison with the
+    oracle's gaps-and-islands formulation is integer-exact. session_end = last event + gap, Spark's definition.
 
     Scale: session_window is a first-class streaming-state operator —
     the same expression runs incrementally under Structured Streaming

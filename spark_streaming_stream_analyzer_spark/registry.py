@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import projections, stats, wordcount
-from .shipping import ensure_package_shipped
+from .session import op_session
 from .sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -32,16 +32,13 @@ ORACLES: dict[str, str] = {}
 def query(name: str, oracle: str | None = None):
     """Register a query (and optionally its DuckDB oracle SQL).
 
-    Every registered callable first ships the package source to the
-    session's Python workers (``shipping.py``) — module-referenced
-    Pandas UDFs (the stateful streaming ops) need it under any
-    launcher whose cwd is not the repo root, the external driver
-    included."""
+    Every registered callable runs on a fresh ``op_session`` child of
+    the caller's session, so no op changes the caller's conf, temp
+    views or functions."""
 
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            ensure_package_shipped(spark)
-            return fn(spark, sf_dir)
+            return fn(op_session(spark), sf_dir)
 
         wrapped.__name__ = getattr(fn, "__name__", name)
         wrapped.__doc__ = fn.__doc__

@@ -6,9 +6,8 @@ settings are what we would ship on a multi-executor cluster: AQE on
 (runtime re-planning, skew-join splitting, partition coalescing),
 shuffle partitions sized to the parallelism, Arrow enabled for any
 Pandas-UDF path, UTC session timezone for deterministic timestamp
-semantics against the DuckDB oracle. Streams run on a
-``stream_session`` child, which carries its own copy of the stream
-settings.
+semantics against the DuckDB oracle. Every registered op runs on an
+``op_session`` child, which carries its own copy of the op settings.
 """
 
 from __future__ import annotations
@@ -25,11 +24,18 @@ def spark_cpus() -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
-def stream_session(spark: SparkSession) -> SparkSession:
-    """A child of ``spark`` for one stream: same SparkContext, own SQL
-    conf, so stream settings never touch the caller's session. Shuffle
-    partitions (the state-store count, fixed at a checkpoint's first
-    run) follow the core count; nanosAsLong and UTC as in ``get_spark``."""
+def op_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` for one op: same SparkContext, own SQL conf,
+    temp views and functions, so an op never touches the caller's
+    session. Shuffle partitions (for a stream, the state-store count,
+    fixed at a checkpoint's first run) follow the core count;
+    nanosAsLong and UTC as in ``get_spark``.
+
+    Trade-off: the child inherits builder/SparkConf settings but not
+    the caller's runtime ``conf.set`` values. Every op, batch or
+    stream, uses ``spark_cpus()`` shuffle partitions: unchanged under
+    ``get_spark``, where that is the default, but in place of a bare
+    builder's 200 or a caller's own runtime setting."""
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", str(spark_cpus()))
     child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -58,9 +64,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # events.ts is parquet TIMESTAMP(NANOS) which Spark refuses by
-        # default; read it as a long (ns since epoch) and convert
-        # explicitly where event time is needed.
+        # older events fixtures store ts as parquet TIMESTAMP(NANOS),
+        # which Spark refuses by default; read it as a long (ns since
+        # epoch) and convert explicitly where event time is needed.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode: single JVM — driver memory is the only knob
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

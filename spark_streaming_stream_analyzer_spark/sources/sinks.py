@@ -20,6 +20,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -572,6 +573,24 @@ def _audited_jsonl_sink():
     return AuditedJsonl
 
 
+@contextmanager
+def _active(spark: SparkSession):
+    """Make ``spark`` the JVM thread's active session for the block.
+    ``DataFrameWriter.save()`` looks a Python data source up on the
+    active session, not on the frame's own, and an op's
+    ``op_session`` child is not active."""
+    jss = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jss.getActiveSession()
+    jss.setActiveSession(spark._jsparkSession)
+    try:
+        yield
+    finally:
+        if prev.isDefined():
+            jss.setActiveSession(prev.get())
+        else:
+            jss.clearActiveSession()
+
+
 def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom SINK via Spark 4's Python DataSource writer API — the
     write-side twin of ``src_python_datasource``: the flagship per-type
@@ -593,9 +612,10 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(tempfile.gettempdir(), f"sgs_pysink_{uuid.uuid4().hex[:12]}")
     os.makedirs(out_dir)
     try:
-        agg.write.format("audited_jsonl").option("path", out_dir).mode(
-            "append"
-        ).save()
+        with _active(spark):
+            agg.write.format("audited_jsonl").option("path", out_dir).mode(
+                "append"
+            ).save()
         import json as _json
 
         with open(os.path.join(out_dir, "_MANIFEST")) as f:

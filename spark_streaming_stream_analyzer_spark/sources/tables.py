@@ -33,19 +33,8 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # The fixture `events.ts` is parquet TIMESTAMP(NANOS), which Spark
-    # rejects unless nanos are read as raw longs. Set it here (it is a
-    # runtime-settable session conf) so the operator surface works on
-    # any caller-provided SparkSession, not just ours. Likewise pin the
-    # session timezone: fixture timestamps are UTC-midnight-aligned and
-    # the oracle compares date-cast strings, so a caller session in a
-    # non-UTC zone must not shift them.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = clean_measurements(df)
@@ -123,7 +112,7 @@ def clean_measurements(df: DataFrame) -> DataFrame:
         # guard A/B measured the unwrapped form at ~18% of the flagship's
         # wall; `unix_micros(cast(ts))` blocked pushdown and paid a
         # per-row conversion). Wall-clock boundaries equal the epoch-us
-        # constants because load_table pins the session timezone to UTC.
+        # constants because every op runs on a UTC ``op_session``.
         dt = dict(df.dtypes).get("ts")
         if dt == "bigint":  # TIMESTAMP(NANOS) vintage read as raw longs
             valid = (F.col("ts") >= EVENT_TS_VALID_MIN_US * 1000) & (
@@ -168,7 +157,7 @@ def ts_timestamp(df: DataFrame, col: str = "ts") -> Column:
     timestamp[us] (read as TIMESTAMP_NTZ). Integer DIV for the nanos
     branch: ts ≈ 1.7e18 exceeds double's 2^53 mantissa, so a float
     divide would corrupt microseconds. The NTZ branch casts through
-    the session timezone, which ``load_table`` pins to UTC."""
+    the session timezone, which ``op_session`` pins to UTC."""
     dt = dict(df.dtypes).get(col)
     if dt == "bigint":
         return F.timestamp_micros(F.expr(f"{col} DIV 1000"))
@@ -245,12 +234,9 @@ def partitionable_key(col: str) -> Column:
 #: derived table in the low hundreds of MB — far under the 8 GB /
 #: 512M-row broadcast hard cap. Driver-side file metadata only: the
 #: gate costs no Spark job, no extra action (the KCORE_BCAST_CAP
-#: discipline without a count). Env-overridable for cluster tuning;
-#: the local fixtures (<11 MB) sit far under any sane cap, so local
-#: plans keep the exact same BroadcastHashJoins.
-BCAST_SRC_CAP_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BCAST_SRC_CAP", str(64 << 20))
-)
+#: discipline without a count). The local fixtures (<11 MB) sit far
+#: under the cap, so local plans keep the exact same BroadcastHashJoins.
+BCAST_SRC_CAP_BYTES = 64 << 20
 
 
 def _source_bytes(sf_dir: str, table: str) -> int:

@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.stats import STAT_COLS, running_stats, stats_oracle_sql
-from ..session import stream_session
 from ..sources.tables import (
     PARTITION_KEY_MAX_BYTES,
     load_table,
@@ -150,14 +149,12 @@ def events_file_stream(
     sweep: six kernels red from this one cause). ``batch_per_pass``
     sets maxFilesPerTrigger to the per-pass part count so ops with
     per-BATCH output contracts (progress counters, per-batch folds)
-    see one batch per full pass regardless of the physical layout.
-    The stream lives on its own ``stream_session`` child of ``spark``."""
-    child = stream_session(spark)
-    schema = child.read.parquet(path).schema
+    see one batch per full pass regardless of the physical layout."""
+    schema = spark.read.parquet(path).schema
     parts = _parquet_parts(path)
     path = _stage_stream_dir(*(parts * copies), force_order=len(parts) > 1)
     stream = (
-        child.readStream.schema(schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", len(parts) if batch_per_pass else 1)
         .parquet(path)
     )
@@ -305,15 +302,14 @@ HAVING date_trunc('day', min(ts)) + INTERVAL 1 DAY
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–static join (SURVEY.md §2.2): the event stream enriched
     with the static customer dimension, then aggregated per market
-    segment. The static side is a plain batch DataFrame, read on the
-    stream's session (``load_table`` sets conf) — Structured
+    segment. The static side is a plain batch DataFrame — Structured
     Streaming re-plans it per micro-batch, and Catalyst broadcasts it
     exactly as in batch, so the streaming fact flow never shuffles for
     the enrich step. Unmatched events (user ids outside the customer
     table) are dropped by the inner join, same as the SQL oracle.
     """
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    cust = load_table(events.sparkSession, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     joined = events.join(
@@ -575,10 +571,9 @@ def stream_batch_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     # readable files and the per-batch fold had nothing to concat)
     parts = _parquet_parts(docs_path)
     src = _stage_stream_dir(*(parts * 2), force_order=len(parts) > 1)
-    child = stream_session(spark)
-    docs_schema = child.read.parquet(docs_path).schema
+    docs_schema = spark.read.parquet(docs_path).schema
     stream = (
-        child.readStream.schema(docs_schema)
+        spark.readStream.schema(docs_schema)
         .option("maxFilesPerTrigger", len(parts))
         .parquet(src)
     )
@@ -910,13 +905,12 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time as _time
 
-    child = stream_session(spark)
-    child.dataSource.register(_pystream_source())
+    spark.dataSource.register(_pystream_source())
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = _tracked_tmp_dir("sgs_pys")
     total = PYSTREAM_BATCHES * PYSTREAM_ROWS
     try:
-        stream = child.readStream.format("pystream_readings").load()
+        stream = spark.readStream.format("pystream_readings").load()
         agg = stream.groupBy("tag").agg(
             F.count("*").alias("n"),
             F.sum(F.round(F.col("reading") * 100).cast("long")).alias("sum_cents"),
@@ -934,7 +928,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             deadline = _time.time() + 120
             while _time.time() < deadline:
-                got = child.table(name).agg(F.sum("n")).collect()[0][0]
+                got = spark.table(name).agg(F.sum("n")).collect()[0][0]
                 if got == total:
                     break
                 _time.sleep(0.5)
@@ -945,7 +939,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
     finally:
         _cleanup_tmp_dirs([ckpt])
-    return child.table(name)
+    return spark.table(name)
 
 
 STREAM_PYSRC_SQL = f"""
@@ -1589,14 +1583,13 @@ def stream_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.exact import cents
 
     path = os.path.join(sf_dir, "orders.parquet")
-    child = stream_session(spark)
-    schema = child.read.parquet(path).schema
+    schema = spark.read.parquet(path).schema
     # parts-aware staging (round-10 MULTIFILE sweep): a multi-part
     # orders directory streams one part per batch — the frontier fold
     # is a monotone union, so batching and order are both immaterial
     _sky_parts = _parquet_parts(path)
     stream = (
-        child.readStream.schema(schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(_stage_stream_dir(*_sky_parts))
     )

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.stats import running_stats, stats_oracle_sql
-from ..session import stream_session
 from .pipelines import _run_to_memory, events_file_stream
 
 
@@ -57,9 +56,8 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.tables import clean_measurements
 
-    child = stream_session(spark)
     events = clean_measurements(
-        child.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     )
 
     run_id = uuid.uuid4().hex[:12]
@@ -87,7 +85,7 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
         def pipeline() -> DataFrame:
             # the staged halves carry the staged frame's own schema
             stream = (
-                child.readStream.schema(events.schema)
+                spark.readStream.schema(events.schema)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src_dir)
             )

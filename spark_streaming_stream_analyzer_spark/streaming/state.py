@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import op_session
+
 
 #: Squared-cents partial sums overflow int64 around ~9e6 rows/key for
 #: 1e4-magnitude values, so ``sumsq`` is carried as two base-10^18
@@ -274,10 +276,9 @@ class ExactStatsProcessor(StatefulProcessor):
     lives in a ValueState handle the store serializes per key.
 
     Requires python-protobuf at runtime (the TWS Python worker speaks a
-    protobuf channel); ``registry.py`` registers the query only where
-    that import succeeds — this container lacks it, so the op is
-    exercised on codec-complete clusters while the
-    ``applyInPandasWithState`` form remains the tested default.
+    protobuf channel). ``registry.py`` registers ``stream_stats_tws``
+    unconditionally: where protobuf does not import, the op runs the
+    ``applyInPandasWithState`` form instead (see ``stream_stats_tws``).
     """
 
     def init(self, handle: StatefulProcessorHandle) -> None:
@@ -438,8 +439,6 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipelines import _cleanup_tmp_dirs, _tracked_tmp_dir, events_file_stream
 
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    # the census reads on the stream's session (nanosAsLong, UTC)
-    child = events.sparkSession
 
     # Per-key EXPECTED FINAL COUNTER through the SAME ingest contract
     # as the stream it polls (a type living only on clock-invalid rows
@@ -456,7 +455,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected = {
         r["readTag_id"]: r["exp_counter"]
         for r in clean_measurements(
-            child.read.parquet(os.path.join(sf_dir, "events.parquet"))
+            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         )
         .groupBy(F.col("event_type").cast("string").alias("readTag_id"))
         .agg(F.count("value").cast("double").alias("exp_counter"))
@@ -484,7 +483,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         while _time.time() < deadline:
             try:
                 per_key = (
-                    child.table(name)
+                    spark.table(name)
                     .groupBy("readTag_id", "counter")
                     .count()
                     .collect()
@@ -514,7 +513,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         _cleanup_tmp_dirs([ckpt])
-    return _final_emission(child.table(name))
+    return _final_emission(spark.table(name))
 
 
 STREAM_STATS_HEARTBEAT_SQL = STREAM_STATS_EXACT_SQL
@@ -751,7 +750,7 @@ def stream_stats_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by disk, not executor memory. Same state algebra, same
     oracle as ``stream_stats_exact_state``; what this query registers
     is that the OPERATOR IS PROVIDER-AGNOSTIC — the provider is set on
-    this stream's own child session, and the emitted rows are
+    this op's own ``op_session`` child, and the emitted rows are
     identical to the default-provider run.
 
     State partitions are sized to the keyspace (4 partitions for a
@@ -765,10 +764,10 @@ def stream_stats_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint's first run."""
     from .pipelines import events_file_stream
 
-    events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    child_conf = events.sparkSession.conf
-    child_conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
-    child_conf.set("spark.sql.shuffle.partitions", "4")
+    child = op_session(spark)
+    child.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
+    child.conf.set("spark.sql.shuffle.partitions", "4")
+    events = events_file_stream(child, os.path.join(sf_dir, "events.parquet"))
     return _exact_state_final(events)
 
 
@@ -896,6 +895,8 @@ SEQP_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+from ..operators.analytics import SEQ_GAP_US  # noqa: E402
+
 
 def _seqp_update(
     key: tuple[int],
@@ -910,8 +911,6 @@ def _seqp_update(
     element, so every match is emitted exactly once across the stream.
     Emits one per-batch partial (n_matches, min span) per user; the
     serving fold sums/mins the partials."""
-    from ..operators.analytics import SEQ_GAP_US
-
     batch = pd.concat(list(pdfs), ignore_index=True)
     if len(batch) == 0:
         return
@@ -1025,6 +1024,8 @@ CUSUM_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+from ..operators.analytics import CUSUM_H_MICRO, CUSUM_K_MICRO  # noqa: E402
+
 
 def _cusum_update(
     key: tuple[str],
@@ -1041,8 +1042,6 @@ def _cusum_update(
     mins the first-alarm time (each alarm row is seen exactly once,
     in the batch whose event crosses h)."""
     import numpy as np
-
-    from ..operators.analytics import CUSUM_H_MICRO, CUSUM_K_MICRO
 
     batch = pd.concat(list(pdfs), ignore_index=True)
     if len(batch) == 0:
@@ -1358,6 +1357,8 @@ U360_OUTPUT_SCHEMA = T.StructType(
 
 _U360_DAY_US = 86_400_000_000
 
+from ..operators.analytics import SESSION_GAP_US_360  # noqa: E402
+
 
 def _u360_update(
     key: tuple[int],
@@ -1371,8 +1372,6 @@ def _u360_update(
     (session boundary test) and the previous day (distinct-day test,
     since days arrive non-decreasing per user)."""
     import numpy as np
-
-    from ..operators.analytics import SESSION_GAP_US_360
 
     batch = pd.concat(list(pdfs), ignore_index=True)
     if len(batch) == 0:

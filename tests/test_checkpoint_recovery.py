@@ -25,7 +25,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from spark_streaming_stream_analyzer_spark.session import stream_session
+from spark_streaming_stream_analyzer_spark.session import op_session
 from spark_streaming_stream_analyzer_spark.sources.tables import (
     clean_measurements,
 )
@@ -75,7 +75,7 @@ def _ingested_rows(query) -> int:
 def test_restart_resumes_complete_mode_aggregate(spark, split_corpus, tmp_path):
     src, add_second_half, first_rows, second_rows = split_corpus
     ckpt = str(tmp_path / "ckpt")
-    child = stream_session(spark)
+    child = op_session(spark)
     schema = child.read.parquet(src).schema
 
     def pipeline():
@@ -143,7 +143,7 @@ def test_restart_resumes_grouped_state_kernel(spark, split_corpus, tmp_path):
     import pandas as pd
 
     src, add_second_half, first_rows, second_rows = split_corpus
-    child = stream_session(spark)
+    child = op_session(spark)
     schema = child.read.parquet(src).schema
 
     def run(ckpt: str, emissions: list) -> object:

@@ -1,10 +1,11 @@
-"""Streaming ops leave the caller's session conf alone.
+"""Registry ops leave the caller's session alone.
 
-Every stream runs on its own ``session.stream_session`` child, so a
-caller whose conf differs from the stream settings (3 shuffle
-partitions, a non-UTC zone, nanosAsLong off) keeps exactly that conf,
-and still gets the oracle answer. Two ops run at once on one caller
-(two threads) must not clobber each other's settings either.
+Every registered op runs on its own ``session.op_session`` child, so a
+caller whose conf differs from the op settings (3 shuffle partitions, a
+non-UTC zone, nanosAsLong off) keeps exactly that conf, and no temp
+view or function an op registers shows up on it; the op still gets the
+oracle answer. Two ops run at once on one caller (two threads) must not
+clobber each other's settings or views either.
 """
 
 from __future__ import annotations
@@ -25,6 +26,15 @@ OPS = [
     "stream_progress_metrics",
     "stream_pareto_front",
     "stream_stats_rocksdb",
+    "sql_surface",
+    "sql_exists_subquery",
+    "sql_lateral",
+    "sql_recursive",
+    "agg_grouping_sets",
+    "udtf_chunk_docs",
+    "src_python_datasource",
+    "sink_python_datasource",
+    "ts_rolling_window_1h",
 ]
 
 CONF_KEYS = (
@@ -44,8 +54,12 @@ def caller(spark):
     return s
 
 
-def _conf(s) -> dict:
-    return {k: s.conf.get(k, None) for k in CONF_KEYS}
+def _state(s) -> dict:
+    return {
+        **{k: s.conf.get(k, None) for k in CONF_KEYS},
+        "views": sorted(t.name for t in s.catalog.listTables()),
+        "chunk_doc": s.catalog.functionExists("chunk_doc"),
+    }
 
 
 def _check(caller, sf_dir: str, name: str) -> None:
@@ -58,15 +72,23 @@ def _check(caller, sf_dir: str, name: str) -> None:
 
 @pytest.mark.parametrize("name", OPS)
 def test_op_keeps_caller_conf_and_matches_oracle(caller, sf_dir, name):
-    before = _conf(caller)
+    before = _state(caller)
     _check(caller, sf_dir, name)
-    assert _conf(caller) == before
+    assert _state(caller) == before
 
 
-def test_concurrent_ops_on_one_caller(caller, sf_dir):
-    before = _conf(caller)
-    pair = ("stream_stats_rocksdb", "stream_progress_metrics")
+@pytest.mark.parametrize(
+    "pair",
+    [
+        ("stream_stats_rocksdb", "stream_progress_metrics"),
+        # both register a temp view named ``orders``
+        ("sql_surface", "sql_exists_subquery"),
+    ],
+    ids="-".join,
+)
+def test_concurrent_ops_on_one_caller(caller, sf_dir, pair):
+    before = _state(caller)
     with ThreadPoolExecutor(max_workers=2) as pool:
         for f in [pool.submit(_check, caller, sf_dir, n) for n in pair]:
             f.result(timeout=300)
-    assert _conf(caller) == before
+    assert _state(caller) == before

@@ -6,8 +6,8 @@ registrations; a mistyped hand-assigned key would name no query, and
 ``scripts/selfcheck.py`` (which walks ``queries()``) would never run
 that oracle.
 
-The streaming runners leave the caller's session conf alone: each
-stream runs on its own ``session.stream_session`` child.
+No op writes the conf of the session it is given: the registry runs
+each op on its own ``session.op_session`` child.
 """
 
 from __future__ import annotations
@@ -25,12 +25,12 @@ def test_oracles_name_registered_queries_and_entry_reexports_the_maps():
     assert list(entrymod.oracle_sql().items()) == list(registry.ORACLES.items())
 
 
-def test_streaming_ops_write_no_caller_session_conf():
-    # ``spark`` is the caller-session parameter of every streaming op
-    pkg = pathlib.Path(registry.__file__).parent / "streaming"
+def test_package_writes_no_caller_session_conf():
+    # ``spark`` is the session parameter of every op and loader
+    pkg = pathlib.Path(registry.__file__).parent
     hits = [
-        f"{path.name}:{n}: {line.strip()}"
-        for path in sorted(pkg.glob("*.py"))
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if "spark.conf.set(" in line or "spark.conf.unset(" in line
     ]

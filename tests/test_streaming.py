@@ -168,17 +168,19 @@ def test_rocksdb_state_store_matches_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from spark_streaming_stream_analyzer_spark.operators.stats import stat_aggs
+    from spark_streaming_stream_analyzer_spark.session import op_session
     from spark_streaming_stream_analyzer_spark.sources.tables import load_table
     from spark_streaming_stream_analyzer_spark.streaming.pipelines import (
         _run_to_memory,
         events_file_stream,
     )
 
-    ev = events_file_stream(spark, f"{sf_dir}/events.parquet")
-    ev.sparkSession.conf.set(
+    child = op_session(spark)
+    child.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
+    ev = events_file_stream(child, f"{sf_dir}/events.parquet")
     streamed = _run_to_memory(
         ev.groupBy(F.col("event_type").alias("readTag_id")).agg(
             *stat_aggs("value")
@@ -202,7 +204,7 @@ def test_heartbeat_reemits_idle_keys(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from spark_streaming_stream_analyzer_spark.session import stream_session
+    from spark_streaming_stream_analyzer_spark.session import op_session
     from spark_streaming_stream_analyzer_spark.streaming.state import (
         exact_state_stats_heartbeat,
     )
@@ -228,7 +230,7 @@ def test_heartbeat_reemits_idle_keys(spark, tmp_path):
         if part.name.endswith(".parquet"):
             os.link(part, stream_dir / f"f{n}.parquet")
             n += 1
-    child = stream_session(spark)
+    child = op_session(spark)
     stream = (
         child.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -61,8 +61,8 @@ def main() -> int:
     only = set(sys.argv[2:])
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # Mirror the external driver's session: a bare builder with NO
-        # repo conf (no AQE/Arrow/nanosAsLong/timezone assumptions may
-        # leak into queries(); the registry's op_session must provision them).
+        # repo conf (no AQE/Arrow/timezone assumptions may leak into
+        # queries(); the registry's op_session must provision them).
         from pyspark.sql import SparkSession
 
         spark = (

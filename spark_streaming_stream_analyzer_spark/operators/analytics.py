@@ -391,7 +391,7 @@ def agg_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type). The same body runs under a watermark as
     ``streaming/pipelines.stream_sliding_window``."""
     ev = load_table(spark, sf_dir, "events")
-    with_ts = ev.withColumn("ev_ts", ts_timestamp(ev))
+    with_ts = ev.withColumn("ev_ts", ts_timestamp())
     return (
         with_ts.groupBy(F.window("ev_ts", "2 days", "1 day"), "event_type")
         .agg(
@@ -741,7 +741,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_raw = load_table(spark, sf_dir, "events")
     ev = ev_raw.select(
         "user_id",
-        F.date_trunc("week", ts_timestamp(ev_raw)).alias("week"),
+        F.date_trunc("week", ts_timestamp()).alias("week"),
     )
     # two consumers (first-seen aggregate + the cell join): one events
     # scan + wide DISTINCT instead of three (round-13 rescan rule)
@@ -946,7 +946,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = agg_session_window(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     hot = (
-        ev.select(ts_micros(ev).alias("us"))
+        ev.select(ts_micros().alias("us"))
         .select(F.expr(f"us DIV {_HOUR_US}").alias("hour_bucket"))
         .groupBy("hour_bucket")
         .agg(F.count("*").alias("hour_events"))
@@ -1043,7 +1043,7 @@ def dq_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     both keyed small (types × days)."""
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", F.to_date(ts_timestamp(ev)).alias("day"))
+        ev.select("event_type", F.to_date(ts_timestamp()).alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("n"))
     )
@@ -1168,7 +1168,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
         ev_raw.select(
             "event_type",
-            ts_micros(ev_raw).alias("us"),
+            ts_micros().alias("us"),
             F.round(F.col("value") * 100).cast("long").alias("c"),
         )
         .select("event_type", F.expr("us DIV 86400000000").alias("d"), "c")
@@ -1270,7 +1270,7 @@ def ts_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "event_type",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "value",
     ).withColumn("bar", F.expr(f"us DIV {BAR_US}"))
@@ -1341,7 +1341,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "event_type",
     )
@@ -1417,7 +1417,7 @@ def ts_sliding_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1: 0.82 → 0.92 s): the (user, day) distinct is tiny and the
     # materialization round-trip costs more than the repeated
     # scan+distinct. The recomputation-wins branch of the rescan rule.
-    ud = ev.select("user_id", F.to_date(ts_timestamp(ev)).alias("day")).distinct()
+    ud = ev.select("user_id", F.to_date(ts_timestamp()).alias("day")).distinct()
     days = ud.select("day").distinct()
     contrib = ud.select(
         "user_id",
@@ -1618,7 +1618,7 @@ def agg_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch hour via exact integer division (module discipline: a
     # double quotient + cast would truncate in Spark but round in a
     # DuckDB CAST, and loses exactness beyond 2^53 µs anyway)
-    us = ts_micros(ev)
+    us = ts_micros()
     x = ((us - F.pmod(us, F.lit(3_600_000_000))) / F.lit(3_600_000_000)).cast(
         "long"
     )
@@ -1884,7 +1884,7 @@ def ts_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOUR_US = 3_600_000_000
     ev = load_table(spark, sf_dir, "events")
     obs = (
-        ev.select("event_type", ts_micros(ev).alias("us"), cents("value").alias("c"))
+        ev.select("event_type", ts_micros().alias("us"), cents("value").alias("c"))
         .select("event_type", F.expr(f"us DIV {HOUR_US}").alias("h"), "c")
         .groupBy("event_type", "h")
         .agg(F.expr("sum(c) * 1000 DIV count(*)").alias("m"))
@@ -2007,7 +2007,7 @@ def seq_pattern_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigger windows.
     """
     ev = load_table(spark, sf_dir, "events")
-    base = ev.select("user_id", ts_micros(ev).alias("us"), "event_type", "event_id")
+    base = ev.select("user_id", ts_micros().alias("us"), "event_type", "event_id")
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     lead1t = F.lead("event_type", 1).over(w)
     lead2t = F.lead("event_type", 2).over(w)
@@ -2165,7 +2165,7 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
-        F.hour(ts_timestamp(ev)).alias("hod"),
+        F.hour(ts_timestamp()).alias("hod"),
         cents("value").alias("c"),
     )
     cells = base.groupBy("event_type", "hod").agg(
@@ -2332,7 +2332,7 @@ def ts_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         (F.round(F.col("value") * 1_000_000).cast("long") - CUSUM_K_MICRO)
         .alias("d"),
@@ -2417,7 +2417,7 @@ def seq_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
-        "user_id", "event_type", ts_micros(ev).alias("us"), "event_id"
+        "user_id", "event_type", ts_micros().alias("us"), "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     pairs = base.select(
@@ -2486,7 +2486,7 @@ def ts_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -2597,7 +2597,7 @@ def agg_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -2682,7 +2682,7 @@ def ts_peak_prominence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -2750,7 +2750,7 @@ def agg_gini_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select(ts_micros(ev).alias("us"), "event_type")
+        ev.select(ts_micros().alias("us"), "event_type")
         .select(F.expr(f"us DIV {SEQ_DAY_US}").alias("day"), "event_type")
         .groupBy("day", "event_type")
         .agg(F.count("*").alias("n"))
@@ -2819,7 +2819,7 @@ def seq_training_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "user_id",
             F.struct(
-                ts_micros(ev).alias("us"),
+                ts_micros().alias("us"),
                 F.col("event_id").alias("eid"),
                 F.col("event_type").alias("t"),
             ).alias("s"),
@@ -3051,7 +3051,7 @@ def ts_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     days = (
-        ev.select("user_id", ts_micros(ev).alias("us"))
+        ev.select("user_id", ts_micros().alias("us"))
         .select("user_id", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .distinct()
     )
@@ -3127,7 +3127,7 @@ def seq_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     base = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     )
     # a triple containing a NULL step is not a path: an untyped event
     # is indistinguishable from a missing one under lead(), and the
@@ -3202,7 +3202,7 @@ def ts_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -3286,7 +3286,7 @@ def ts_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     ud = (
-        ev.select("user_id", ts_micros(ev).alias("us"))
+        ev.select("user_id", ts_micros().alias("us"))
         .select("user_id", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .distinct()
     )
@@ -3530,7 +3530,7 @@ def funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
-        "user_id", "event_type", ts_micros(ev).alias("us")
+        "user_id", "event_type", ts_micros().alias("us")
     )
     firsts = base.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("us"))).alias("v0")
@@ -3618,7 +3618,7 @@ def ts_peak_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = load_table(spark, sf_dir, "events")
     udc = (
-        ev.select("event_type", "user_id", ts_micros(ev).alias("us"))
+        ev.select("event_type", "user_id", ts_micros().alias("us"))
         .select(
             "event_type", "user_id",
             F.expr(f"us DIV {SEQ_DAY_US}").alias("day"),
@@ -3701,7 +3701,7 @@ def ts_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -3777,7 +3777,7 @@ def mart_user_360(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -3845,7 +3845,7 @@ def ts_weekend_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -3933,7 +3933,7 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     ).withColumn("week", F.expr(f"us DIV {WEEK_US}"))
@@ -4013,7 +4013,7 @@ def ts_changepoint_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         F.round(F.col("value") * 1_000_000).cast("long").alias("m"),
     )
     tagged = base.join(F.broadcast(alarms), "event_type").select(
@@ -4100,7 +4100,7 @@ def agg_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id"
+        "user_id", ts_micros().alias("us"), "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     flagged = base.withColumn(
@@ -4181,7 +4181,7 @@ def ts_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("x"))
@@ -4298,7 +4298,7 @@ def ts_dayn_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     ud = (
-        ev.select("user_id", ts_micros(ev).alias("us"))
+        ev.select("user_id", ts_micros().alias("us"))
         .select("user_id", F.expr(f"us DIV {SEQ_DAY_US}").alias("day"))
         .distinct()
         .localCheckpoint(eager=False)

@@ -142,7 +142,7 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id") % SCD2_USER_MOD == 0
     )
-    us = ts_micros(ev)
+    us = ts_micros()
     w = Window.partitionBy("user_id").orderBy("valid_from_us", "event_id")
     return (
         ev.select("user_id", "event_id", us.alias("valid_from_us"), "value")
@@ -229,7 +229,7 @@ def dq_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # machinery and event-keyed replay logic): an at-least-once ingest
     # that lands duplicate doc_ids/event_ids is detected HERE, before
     # the assumption silently degrades those reports (round-8 dup-rows
-    # sweep — the documented ingest contract, NOTES_r8)
+    # sweep — the documented ingest contract)
     docs = load_table(spark, sf_dir, "documents")
     ddup = check(
         "documents_pk_unique",
@@ -633,7 +633,7 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     days = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .select("event_type", F.expr("us DIV 86400000000").alias("day"))
         # two consumers (range scalar + the half-tagging pass): one
         # events scan instead of four (round-13 rescan rule; the
@@ -875,7 +875,7 @@ def dq_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            ts_micros(ev).alias("us"),
+            ts_micros().alias("us"),
             F.round(F.col("value") * 1_000_000).cast("long").alias("m"),
         )
         .select("event_type", "m", F.expr("us DIV 86400000000").alias("day"))
@@ -1068,7 +1068,7 @@ def privacy_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         ev.select(
             "event_type",
-            ts_micros(ev).alias("us"),
+            ts_micros().alias("us"),
             F.expr(f"user_id DIV {KANON_BUCKET}").alias("user_bucket"),
             cents("value").alias("cents"),
         )

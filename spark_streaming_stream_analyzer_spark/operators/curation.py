@@ -287,7 +287,7 @@ def ts_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendered as double once at the end."""
     ev = load_table(spark, sf_dir, "events")
     minute = (
-        ev.select(ts_micros(ev).alias("us"), cents("value").alias("c"))
+        ev.select(ts_micros().alias("us"), cents("value").alias("c"))
         .select(F.expr("us DIV 60000000").alias("bucket"), "c")
         .groupBy("bucket")
         .agg(F.sum("c").alias("sum_cents"), F.count("*").alias("n"))

@@ -416,7 +416,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_raw = load_table(spark, sf_dir, "events")
     ev = ev_raw.select(
         "user_id",
-        ts_micros(ev_raw).alias("ev_us"),
+        ts_micros().alias("ev_us"),
         "event_id",
         "event_type",
     )
@@ -470,7 +470,7 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     per_type = (
-        ev.select("event_type", ts_micros(ev).alias("us"))
+        ev.select("event_type", ts_micros().alias("us"))
         .groupBy("event_type")
         .agg(F.max("us").alias("latest_us"), F.count("*").alias("n_events"))
     )
@@ -526,7 +526,7 @@ def approx_distinct_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.hashing import HLL_ALPHA, HLL_M, HLL_REST_BITS
     ev = load_table(spark, sf_dir, "events")
-    ev = ev.select("event_type", "user_id", ts_micros(ev).alias("us"))
+    ev = ev.select("event_type", "user_id", ts_micros().alias("us"))
     # integer DIV, not double-divide-then-cast (truncates in Spark but
     # rounds in DuckDB — the feature_quantile_bins lesson); matches the
     # sibling day-bucket ops (dq_distribution_drift, privacy_kanon_cells)
@@ -726,7 +726,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev_raw = load_table(spark, sf_dir, "events")
     ev = ev_raw.select(
-        "user_id", ts_micros(ev_raw).alias("ev_us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("ev_us"), "event_id", "event_type"
     )
     joined = od.join(
         ev,

@@ -302,7 +302,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer: the collected list is one ORDER's parts (single-digit
     rows in TPC-H at any sf), not a graph neighborhood — bounded by
     order semantics, so this never hits the collect_list-hub OOM the
-    census shapes must avoid (NOTES_r7 §3). Cross-order duplicate
+    census shapes must avoid. Cross-order duplicate
     edges fall to the same ``distinct`` the self-join form used."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     per_order = li.groupBy("l_orderkey").agg(
@@ -671,7 +671,7 @@ def graph_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction by neighborhood overlap on the DEGREE-CAPPED
     co-purchase graph — the scale-safe form of
     :func:`graph_jaccard_neighbors` (VERDICT r6 item 4; oracle-ready
-    in the library, registered in the round-8 front per NOTES_r7 §1): every node
+    in the library, registered in the round-8 front): every node
     keeps at most ``JACCARD_DEG_CAP`` neighbors, chosen by a
     deterministic portable hash of the edge (an unbiased fixed-size
     neighbor sample both engines reproduce bit-for-bit), the sampled

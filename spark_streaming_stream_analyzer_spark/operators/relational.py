@@ -265,14 +265,12 @@ def join_asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate), orders per user are bounded, so the fan-out is modest and
     the max(struct) aggregation collapses it back with map-side combine.
     Tiebreak on o_orderkey makes ties deterministic.
-    ``ts_timestamp`` reads `ts` as a TIMESTAMP whatever the fixture
-    vintage (native timestamp[us], or bigint nanos in older fixtures).
     """
     ev_raw = load_table(spark, sf_dir, "events")
     ev = ev_raw.select(
         "event_id",
         "user_id",
-        ts_timestamp(ev_raw).alias("ev_ts"),
+        ts_timestamp().alias("ev_ts"),
     )
     od = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
@@ -331,7 +329,7 @@ def join_pit_training_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = ev_raw.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
-        ts_timestamp(ev_raw).alias("ev_ts"),
+        ts_timestamp().alias("ev_ts"),
         F.round(F.col("value") * 100).cast("long").alias("label_cents"),
     )
     od = load_table(spark, sf_dir, "orders").select(
@@ -621,29 +619,18 @@ FROM orders
 """
 
 
-# Oracle vintage note (applies to EVENT_TIME_PACK_SQL, TS_GAP_STATS_SQL,
-# TS_ROLLING_1H_SQL, JOIN_PIT_SQL, DQ_DOD_SQL and any other oracle using
-# epoch_us(ts)/hour(ts)/date_trunc on ts directly): these assume the
-# CURRENT fixture vintage, where events.ts is a native parquet
-# timestamp[us] column DuckDB reads as TIMESTAMP. On the older
-# bigint-nanos fixture vintage only the SPARK side is adaptive
-# (ts_timestamp/ts_micros branch on dtype); the DuckDB oracles would
-# see a BIGINT ts and error. If the fixture ever reverts, mirror the
-# adaptivity by swapping epoch_us(ts) for an epoch-us macro chosen per
-# vintage (ts DIV 1000 on the nanos form) — see NOTES_r4.md §1.
 def fn_event_time_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time scalar-function pack over the events stream's native
-    timestamp column (the fixture's ts is parquet timestamp[us]; the
-    vintage-adaptive ``ts_timestamp`` keeps the bigint-nanos form
-    working too). Extract + truncate + format, rolled into a per
-    (event_type, hour-of-day) profile — the arrival-time histogram a
+    timestamp column (the fixture's ts is parquet timestamp[us]).
+    Extract + truncate + format, rolled into a per (event_type,
+    hour-of-day) profile — the arrival-time histogram a
     stream-freshness dashboard reads.
 
     One partial/final hash aggregate over a 2-column scan; every
     expression is a codegen'd JVM intrinsic, no Python anywhere.
     """
     ev = load_table(spark, sf_dir, "events")
-    t = ts_timestamp(ev)
+    t = ts_timestamp()
     return (
         ev.select(
             "event_type",
@@ -682,7 +669,7 @@ def ts_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     gaps = (
-        ev.select("user_id", ts_micros(ev).alias("us"), "event_id")
+        ev.select("user_id", ts_micros().alias("us"), "event_id")
         .withColumn("gap", F.col("us") - F.lag("us").over(w))
         .filter(F.col("gap").isNotNull())
     )
@@ -946,15 +933,14 @@ def ts_rolling_window_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     RANGE frames over the integer microsecond timeline are engine-
     portable (identical peer-inclusion semantics in Spark and DuckDB,
-    no interval-type quirks) and vintage-proof via ``ts_micros``. One
-    window shuffle on user_id; the frame scan is incremental within
-    each partition, never quadratic.
+    no interval-type quirks). One window shuffle on user_id; the frame
+    scan is incremental within each partition, never quadratic.
     """
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
         "event_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         cents("value").alias("c"),
     )
     w = (
@@ -1337,7 +1323,7 @@ def agg_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id.
     """
     ev = load_table(spark, sf_dir, "events")
-    ts = ts_timestamp(ev)
+    ts = ts_timestamp()
     return (
         ev.select("user_id", ts.alias("ev_ts"))
         .groupBy("user_id", F.session_window("ev_ts", f"{SESSION_GAP_MIN} minutes"))
@@ -1663,7 +1649,7 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass per user ordered by day. Daily means are exact-cents.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.to_date(ts_timestamp(ev))
+    day = F.to_date(ts_timestamp())
     # ev has three consumers (daily means, span scalar, user list) — a
     # localCheckpoint of the projection was tried in the round-13
     # optimization pass and REVERTED on measurement (warmed A/B at
@@ -2898,7 +2884,7 @@ def sort_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = od.select(
         "o_orderkey",
         cents("o_totalprice").alias("price_c"),
-        ts_micros(od, "o_orderdate").alias("us"),
+        ts_micros("o_orderdate").alias("us"),
     ).select(
         "o_orderkey", "price_c",
         F.expr("us DIV 86400000000").alias("day"),

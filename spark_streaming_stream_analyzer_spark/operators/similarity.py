@@ -1962,8 +1962,8 @@ KNNG_BUCKET_CAP = 256
 def emb_knn_srp_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual kNN graph via SRP-LSH candidate generation — the
     scale-safe form of :func:`emb_knn_graph` (VERDICT r6 item 4;
-    oracle-ready in the library, registered in the round-8 front per
-    NOTES_r7 §1): identical mutual-top-5 semantics, but the pair universe
+    oracle-ready in the library, registered in the round-8 front):
+    identical mutual-top-5 semantics, but the pair universe
     is band-bucket cohabitants instead of the exact N² census.
 
     Plan shape (the 100 TB story): one map-only signature scan, a

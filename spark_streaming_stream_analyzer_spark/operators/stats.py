@@ -81,7 +81,7 @@ def stats_oracle_sql(table: str, key: str, value: str) -> str:
     off by 1 ulp above 2^64 while Spark's decimal cast (and strtod)
     are correctly rounded — the squared-cents sum crosses 2^64 at
     ~2e6 ordinary-magnitude rows per group (round-10 cap-group sweep
-    caught agg_running_stats there; same primitive as NOTES_r9 §3)."""
+    caught agg_running_stats there)."""
     c = f"CAST(round({value}*100) AS BIGINT)"
     cd = f"CAST(round({value}*100) AS DECIMAL(18,0))"
     sd = f"CAST(CAST(SUM({c}) AS VARCHAR) AS DOUBLE)"

@@ -765,7 +765,7 @@ query("emb_pca_power", _sim.EMB_PCA_SQL)(_sim.emb_pca_power)
 query("emb_knn_graph", _sim.EMB_KNN_SQL)(_sim.emb_knn_graph)
 # scale-safe twin: SRP-banded candidate join + exact re-rank; the exact
 # all-pairs census above stays registered as its fixture-scale recall
-# oracle (NOTES_r7 section 1, registered round 8)
+# oracle (registered round 8)
 query("emb_knn_srp_graph", _sim.EMB_KNN_SRP_SQL)(_sim.emb_knn_srp_graph)
 query("emb_class_centroids", _sim.EMB_CENTROID_SQL)(_sim.emb_class_centroids)
 query("emb_class_outliers", _sim.EMB_OUTLIER_SQL)(_sim.emb_class_outliers)
@@ -911,7 +911,7 @@ query("graph_bfs_distances", _gr.GRAPH_BFS_SQL)(_gr.graph_bfs_distances)
 query("graph_jaccard_neighbors", _gr.GRAPH_JACCARD_SQL)(_gr.graph_jaccard_neighbors)
 # scale-safe twin: degree-capped re-symmetrized census; the exact wedge
 # census above stays registered as its fixture-scale recall oracle
-# (NOTES_r7 section 1, registered round 8)
+# (registered round 8)
 query("graph_jaccard_capped", _gr.GRAPH_JACCARD_CAPPED_SQL)(_gr.graph_jaccard_capped)
 query("graph_kcore", _gr.GRAPH_KCORE_SQL)(_gr.graph_kcore)
 query("graph_degree_assortativity", _gr.GRAPH_ASSORT_SQL)(_gr.graph_degree_assortativity)

@@ -6,7 +6,9 @@ settings are what we would ship on a multi-executor cluster: AQE on
 (runtime re-planning, skew-join splitting, partition coalescing),
 shuffle partitions sized to the parallelism, Arrow enabled for any
 Pandas-UDF path, UTC session timezone for deterministic timestamp
-semantics against the DuckDB oracle. Every registered op runs on an
+semantics against the DuckDB oracle. Timestamp columns are parquet
+``timestamp[us]``; Spark refuses a nanosecond parquet timestamp at
+read (``PARQUET_TYPE_ILLEGAL``). Every registered op runs on an
 ``op_session`` child, which carries its own copy of the op settings.
 """
 
@@ -28,8 +30,8 @@ def op_session(spark: SparkSession) -> SparkSession:
     """A child of ``spark`` for one op: same SparkContext, own SQL conf,
     temp views and functions, so an op never touches the caller's
     session. Shuffle partitions (for a stream, the state-store count,
-    fixed at a checkpoint's first run) follow the core count;
-    nanosAsLong and UTC as in ``get_spark``.
+    fixed at a checkpoint's first run) follow the core count; UTC as
+    in ``get_spark``.
 
     Trade-off: the child inherits builder/SparkConf settings but not
     the caller's runtime ``conf.set`` values. Every op, batch or
@@ -38,7 +40,6 @@ def op_session(spark: SparkSession) -> SparkSession:
     builder's 200 or a caller's own runtime setting."""
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", str(spark_cpus()))
-    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     child.conf.set("spark.sql.session.timeZone", "UTC")
     return child
 
@@ -64,10 +65,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # older events fixtures store ts as parquet TIMESTAMP(NANOS),
-        # which Spark refuses by default; read it as a long (ns since
-        # epoch) and convert explicitly where event time is needed.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode: single JVM — driver memory is the only knob
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

@@ -107,36 +107,17 @@ def clean_measurements(df: DataFrame) -> DataFrame:
     the fixture is all-finite and in-window, so this is an identity.
     """
     if "ts" in df.columns:
-        # Compare the RAW column against literals of its own type so the
-        # window reaches the parquet scan as PushedFilters (the round-9
-        # guard A/B measured the unwrapped form at ~18% of the flagship's
-        # wall; `unix_micros(cast(ts))` blocked pushdown and paid a
-        # per-row conversion). Wall-clock boundaries equal the epoch-us
-        # constants because every op runs on a UTC ``op_session``.
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":  # TIMESTAMP(NANOS) vintage read as raw longs
-            valid = (F.col("ts") >= EVENT_TS_VALID_MIN_US * 1000) & (
-                F.col("ts") < EVENT_TS_VALID_MAX_US * 1000
-            )
-        elif dt == "timestamp_ntz":  # current fixture vintage
-            # NTZ literals are session-timezone-independent, so this
-            # is safe even for callers that never pinned the session
-            # to UTC (heartbeat census, ckpt direct read)
-            valid = (
-                F.col("ts") >= F.expr("TIMESTAMP_NTZ '1990-01-01 00:00:00'")
-            ) & (F.col("ts") < F.expr("TIMESTAMP_NTZ '2100-01-01 00:00:00'"))
-        else:
-            # instant-typed ('timestamp') vintage: a TIMESTAMP literal
-            # resolves through the SESSION timezone, which not every
-            # caller pins to UTC — keep the instant-correct epoch-us
-            # comparison here (self-review r9). No current fixture
-            # takes this branch, so the pushdown win stays where the
-            # data is.
-            us = F.unix_micros(F.col("ts"))
-            valid = (us >= EVENT_TS_VALID_MIN_US) & (
-                us < EVENT_TS_VALID_MAX_US
-            )
-        df = df.filter(valid)
+        # Compare the RAW column against literals so the window reaches
+        # the parquet scan as PushedFilters (the round-9 guard A/B
+        # measured the unwrapped form at ~18% of the flagship's wall;
+        # `unix_micros(cast(ts))` blocked pushdown and paid a per-row
+        # conversion). The boundaries equal the epoch-us constants:
+        # every op runs on a UTC session, through which an instant
+        # (`timestamp`) column coerces the NTZ literals.
+        df = df.filter(
+            (F.col("ts") >= F.expr("TIMESTAMP_NTZ '1990-01-01 00:00:00'"))
+            & (F.col("ts") < F.expr("TIMESTAMP_NTZ '2100-01-01 00:00:00'"))
+        )
     if "value" not in df.columns:
         return df
     c = F.col("value")
@@ -150,28 +131,18 @@ def clean_measurements(df: DataFrame) -> DataFrame:
     return df.withColumn("value", F.when(finite, c))
 
 
-def ts_timestamp(df: DataFrame, col: str = "ts") -> Column:
-    """``events.ts`` as a proper TIMESTAMP, whatever the fixture
-    vintage: older fixtures carry parquet TIMESTAMP(NANOS) read as a
-    bigint of epoch-nanos (``nanosAsLong``), current ones a native
-    timestamp[us] (read as TIMESTAMP_NTZ). Integer DIV for the nanos
-    branch: ts ≈ 1.7e18 exceeds double's 2^53 mantissa, so a float
-    divide would corrupt microseconds. The NTZ branch casts through
-    the session timezone, which ``op_session`` pins to UTC."""
-    dt = dict(df.dtypes).get(col)
-    if dt == "bigint":
-        return F.timestamp_micros(F.expr(f"{col} DIV 1000"))
+def ts_timestamp(col: str = "ts") -> Column:
+    """A timestamp[us] column (read as TIMESTAMP_NTZ) as a TIMESTAMP,
+    cast through the session timezone, which ``op_session`` pins to
+    UTC."""
     return F.col(col).cast("timestamp")
 
 
-def ts_micros(df: DataFrame, col: str = "ts") -> Column:
-    """``events.ts`` as bigint epoch-microseconds (both vintages) —
-    the integer form every exact-arithmetic operator and the DuckDB
-    oracle's ``epoch_us(ts)`` agree on."""
-    dt = dict(df.dtypes).get(col)
-    if dt == "bigint":
-        return F.expr(f"{col} DIV 1000")
-    return F.unix_micros(F.col(col).cast("timestamp"))
+def ts_micros(col: str = "ts") -> Column:
+    """A timestamp column as bigint epoch-microseconds: the integer
+    form every exact-arithmetic operator and the DuckDB oracle's
+    ``epoch_us(ts)`` agree on."""
+    return F.unix_micros(ts_timestamp(col))
 
 
 def load_table_cpu(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -139,8 +139,8 @@ def events_file_stream(
     ``path`` may be a single parquet file (staged into a dir) or a
     directory of parts. ``copies`` stages the source N times (N full
     passes) for replay-shaped tests. The stream schema is read from
-    the parquet footer, so both fixture vintages (bigint-nanos ts /
-    native timestamp[us]) stream with their true column types.
+    the parquet footer, so ts streams as the table's timestamp[us]
+    column, as ``load_table`` reads it.
 
     A multi-part directory is ALWAYS re-staged with forced mtimes —
     the source orders batches by ms-granularity mtime, not name, so a
@@ -268,9 +268,7 @@ def stream_windowed_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     be dropped (exercised in tests); on the fixture replay nothing is
     late, so the result equals the batch/oracle answer."""
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    # ns → µs with integer division (double division loses ulps at
-    # epoch-nanosecond magnitude)
-    with_ts = events.withColumn("ev_ts", ts_timestamp(events))
+    with_ts = events.withColumn("ev_ts", ts_timestamp())
     counts = (
         with_ts.withWatermark("ev_ts", "1 hour")
         .groupBy(F.window("ev_ts", "1 day"), F.col("event_type"))
@@ -351,7 +349,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.relational import SESSION_GAP_MIN
 
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    with_ts = events.withColumn("ev_ts", ts_timestamp(events))
+    with_ts = events.withColumn("ev_ts", ts_timestamp())
     sessions = (
         with_ts.withWatermark("ev_ts", f"{SESSION_WM_HOURS} hour")
         .groupBy(
@@ -416,7 +414,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     − 1 h), reproduced in the oracle's HAVING. Batch twin:
     ``operators/analytics.agg_sliding_window``."""
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    with_ts = events.withColumn("ev_ts", ts_timestamp(events))
+    with_ts = events.withColumn("ev_ts", ts_timestamp())
     counts = (
         with_ts.withWatermark("ev_ts", "1 hour")
         .groupBy(F.window("ev_ts", "2 days", "1 day"), "event_type")
@@ -455,7 +453,7 @@ def stream_minute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     end ≤ final watermark) are bit-identical to the batch tier, which
     the oracle's HAVING reproduces."""
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    with_ts = events.withColumn("ev_ts", ts_timestamp(events))
+    with_ts = events.withColumn("ev_ts", ts_timestamp())
     rolled = (
         with_ts.withWatermark("ev_ts", "1 hour")
         .groupBy(F.window("ev_ts", "1 minute"))
@@ -497,7 +495,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts to keep the result compact.
     """
     base = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    with_ts = base.withColumn("ev_ts", ts_timestamp(base))
+    with_ts = base.withColumn("ev_ts", ts_timestamp())
     purchases = (
         with_ts.filter(F.col("event_type") == "purchase")
         .withWatermark("ev_ts", "1 hour")
@@ -691,7 +689,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.struct("event_type", "value").alias("payload"),
         F.struct(
-            ts_micros(stream).alias("t"), _dedup_fingerprint().alias("f")
+            ts_micros().alias("t"), _dedup_fingerprint().alias("f")
         ).alias("rank"),
     )
     kept = keyed.groupBy("event_id").agg(F.min_by("payload", "rank").alias("p"))
@@ -743,7 +741,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch flushes them. Oracle = batch left join (0 clicks for the
     unmatched)."""
     base = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    with_ts = base.withColumn("ev_ts", ts_timestamp(base))
+    with_ts = base.withColumn("ev_ts", ts_timestamp())
     purchases = (
         with_ts.filter(F.col("event_type") == "purchase")
         .withWatermark("ev_ts", "1 hour")
@@ -820,7 +818,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(sf_dir, "events.parquet"), copies=2
     )
     deduped = (
-        stream.withColumn("ev_ts", ts_timestamp(stream))
+        stream.withColumn("ev_ts", ts_timestamp())
         .withWatermark("ev_ts", "40 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
@@ -1209,7 +1207,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         latest = (
-            batch_df.withColumn("us", ts_micros(batch_df))
+            batch_df.withColumn("us", ts_micros())
             .groupBy("user_id")
             .agg(F.max(F.struct("us", "event_id", "value")).alias("s"))
             .select("user_id", "s.us", "s.event_id", "s.value")
@@ -1261,10 +1259,10 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import ts_micros, ts_timestamp
 
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    us = ts_micros(ev)
+    us = ts_micros()
     base = ev.select(
         "event_type",
-        ts_timestamp(ev).alias("ev_ts"),
+        ts_timestamp().alias("ev_ts"),
         us.alias("us"),
         "event_id",
         "value",
@@ -1332,7 +1330,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         latest = (
-            batch_df.withColumn("us", ts_micros(batch_df))
+            batch_df.withColumn("us", ts_micros())
             .withColumn(
                 "op",
                 F.when(F.col("event_type") == "error", F.lit("D")).otherwise(
@@ -1395,7 +1393,7 @@ def stream_freshness_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         part = (
-            batch_df.withColumn("us", ts_micros(batch_df))
+            batch_df.withColumn("us", ts_micros())
             .groupBy("event_type")
             .agg(F.max("us").alias("latest_us"), F.count("*").alias("n"))
         )
@@ -1599,7 +1597,7 @@ def stream_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = df.select(
             "o_orderkey",
             cents("o_totalprice").alias("price_c"),
-            ts_micros(df, "o_orderdate").alias("us"),
+            ts_micros("o_orderdate").alias("us"),
         ).select(
             "o_orderkey", "price_c",
             F.expr("us DIV 86400000000").alias("day"),
@@ -1760,7 +1758,7 @@ def stream_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells = (
             batch_df.select(
                 "event_type",
-                ts_micros(batch_df).alias("us"),
+                ts_micros().alias("us"),
                 F.expr(f"user_id DIV {KANON_BUCKET}").alias("user_bucket"),
                 F.round(F.col("value") * 100).cast("long").alias("cents"),
             )

@@ -682,7 +682,7 @@ def stream_sessionize_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     proj = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("c"),
@@ -858,7 +858,7 @@ def stream_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     proj = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "event_type",
     ).filter(F.col("event_type").isin("click", "purchase"))
@@ -979,7 +979,7 @@ def stream_seq_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     proj = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     )
     out = proj.groupBy("user_id").applyInPandasWithState(
         _seqp_update,
@@ -1111,7 +1111,7 @@ def stream_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     proj = ev.select(
-        "event_type", ts_micros(ev).alias("us"), "event_id", "value"
+        "event_type", ts_micros().alias("us"), "event_id", "value"
     )
     out = proj.groupBy("event_type").applyInPandasWithState(
         _cusum_update,
@@ -1212,7 +1212,7 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     proj = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     )
     out = proj.groupBy("user_id").applyInPandasWithState(
         _trans_update,
@@ -1298,7 +1298,7 @@ def stream_new_user_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import ts_micros
 
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    proj = ev.select("user_id", ts_micros(ev).alias("us"))
+    proj = ev.select("user_id", ts_micros().alias("us"))
     out = proj.groupBy("user_id").applyInPandasWithState(
         _newu_update,
         outputStructType=NEWU_OUTPUT_SCHEMA,
@@ -1433,7 +1433,7 @@ def stream_user_360(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     proj = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type",
+        "user_id", ts_micros().alias("us"), "event_id", "event_type",
         "value",
     )
     out = proj.groupBy("user_id").applyInPandasWithState(

@@ -194,7 +194,7 @@ def test_stream_upsert_equals_batch_latest(spark, sf_dir):
     )
     want = {
         r["user_id"]: (r["us"], r["event_id"], r["value"])
-        for r in ev.withColumn("us", ts_micros(ev))
+        for r in ev.withColumn("us", ts_micros())
         .withColumn("rn", rn)
         .filter(F.col("rn") == 1)
         .collect()
@@ -367,7 +367,7 @@ def test_resample_interp_vs_brute(spark, sf_dir):
     HOUR = 3_600_000_000
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "event_type", ts_micros(ev).alias("us"), "value"
+        "event_type", ts_micros().alias("us"), "value"
     ).collect()
     cells = {}
     for r in rows:
@@ -413,7 +413,7 @@ def test_seq_pattern_triples_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_type", "event_id"
+        "user_id", ts_micros().alias("us"), "event_type", "event_id"
     ).collect()
     by_u = {}
     for r in rows:
@@ -492,7 +492,7 @@ def test_seasonal_profile_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "event_type", F.hour(ts_timestamp(ev)).alias("hod"), "value"
+        "event_type", F.hour(ts_timestamp()).alias("hod"), "value"
     ).collect()
     cells = {}
     for r in rows:
@@ -535,7 +535,7 @@ def test_cusum_matches_sequential_recursion(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "event_type", ts_micros(ev).alias("us"), "event_id", "value"
+        "event_type", ts_micros().alias("us"), "event_id", "value"
     ).collect()
     by_t = {}
     for r in rows:
@@ -610,7 +610,7 @@ def test_seq_transition_matrix_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", "event_type", ts_micros(ev).alias("us"), "event_id"
+        "user_id", "event_type", ts_micros().alias("us"), "event_id"
     ).collect()
     by_u = {}
     for r in rows:
@@ -653,7 +653,7 @@ def test_ts_autocorr_lag_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -702,7 +702,7 @@ def test_agg_theil_sen_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -737,7 +737,7 @@ def test_ts_peak_prominence_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -770,7 +770,7 @@ def test_gini_impurity_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select(ts_micros(ev).alias("us"), "event_type").collect()
+    rows = ev.select(ts_micros().alias("us"), "event_type").collect()
     daily = {}
     for r in rows:
         d = r["us"] // an.SEQ_DAY_US
@@ -802,7 +802,7 @@ def test_seq_training_windows_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     ).collect()
     by_u = {}
     for r in rows:
@@ -906,7 +906,7 @@ def test_activity_streaks_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("user_id", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("user_id", ts_micros().alias("us")).collect()
     days = {}
     for r in rows:
         days.setdefault(r["user_id"], set()).add(r["us"] // an.SEQ_DAY_US)
@@ -946,7 +946,7 @@ def test_seq_top_paths_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     ).collect()
     by_u = {}
     for r in rows:
@@ -981,7 +981,7 @@ def test_backtest_snaive_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -1018,7 +1018,7 @@ def test_cumulative_users_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("user_id", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("user_id", ts_micros().alias("us")).collect()
     ud = {(r["user_id"], r["us"] // an.SEQ_DAY_US) for r in rows}
     first = {}
     for u, d in ud:
@@ -1112,7 +1112,7 @@ def test_funnel_latency_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", "event_type", ts_micros(ev).alias("us")
+        "user_id", "event_type", ts_micros().alias("us")
     ).collect()
     v0 = {}
     buys = {}
@@ -1155,7 +1155,7 @@ def test_peak_attribution_consistent_with_peaks(spark, sf_dir):
     }
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "event_type", "user_id", ts_micros(ev).alias("us")
+        "event_type", "user_id", ts_micros().alias("us")
     ).collect()
     udc = {}
     for r in rows:
@@ -1187,7 +1187,7 @@ def test_rolling_anomaly_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -1225,7 +1225,7 @@ def test_user_360_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type",
+        "user_id", ts_micros().alias("us"), "event_id", "event_type",
         "value",
     ).collect()
     by_u = {}
@@ -1264,7 +1264,7 @@ def test_weekend_lift_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -1307,7 +1307,7 @@ def test_cohort_ltv_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_type", "value"
+        "user_id", ts_micros().alias("us"), "event_type", "value"
     ).collect()
     first = {}
     for r in rows:
@@ -1352,7 +1352,7 @@ def test_changepoint_impact_vs_brute(spark, sf_dir):
     }
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "event_type", ts_micros(ev).alias("us"), "value"
+        "event_type", ts_micros().alias("us"), "value"
     ).collect()
     expect = {}
     for t, cut in alarms.items():
@@ -1387,7 +1387,7 @@ def test_bounce_rate_vs_brute(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id"
+        "user_id", ts_micros().alias("us"), "event_id"
     ).collect()
     by_u = {}
     for r in rows:
@@ -1428,7 +1428,7 @@ def test_fano_factor_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("event_type", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("event_type", ts_micros().alias("us")).collect()
     daily = {}
     for r in rows:
         k = (r["event_type"], r["us"] // an.SEQ_DAY_US)
@@ -1477,7 +1477,7 @@ def test_dayn_retention_vs_brute(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select("user_id", ts_micros(ev).alias("us")).collect()
+    rows = ev.select("user_id", ts_micros().alias("us")).collect()
     ud = {}
     for r in rows:
         ud.setdefault(r["user_id"], set()).add(r["us"] // an.SEQ_DAY_US)

@@ -336,7 +336,7 @@ def test_kanon_no_small_cells_and_conservation(spark, sf_dir):
 
     evdf = load_table(spark, sf_dir, "events")
     for r in evdf.select(
-        "event_type", ts_micros(evdf).alias("us"), "user_id"
+        "event_type", ts_micros().alias("us"), "user_id"
     ).collect():
         raw[
             (r["event_type"], r["us"] // 86_400_000_000,

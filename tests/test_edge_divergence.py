@@ -314,7 +314,7 @@ def test_schema_drift_parts_recipe(spark, tmp_path):
 
 # ----------------------------------------------------------------------
 # try_variant_get coercion matrix for the NON-int target types
-# (round-13 probe, NOTES_r12 §9 candidate (a)): the r12 JSONNEST matrix
+# (round-13 probe): the r12 JSONNEST matrix
 # pinned only 'int'. No registered kernel extracts double/string/
 # boolean YET — this pin is the knowledge contract a future kernel
 # inherits, and it fails loudly if a Spark upgrade shifts the

@@ -130,7 +130,7 @@ NULL_PAYLOAD_PARITY = [
 #: fixed queries that must agree with their oracle when GROUPING/JOIN
 #: keys are NULL (every 7th user_id / 11th event_type / 11th source /
 #: 7th label) — the anonymous-traffic regime. Round-7 fixes plus the
-#: round-8 batch backlog (NOTES_r7 §6 findings 1-3).
+#: round-8 batch backlog.
 NULL_KEYS_PARITY = [
     "seq_top_paths",        # any-NULL-step triples dropped in both
     "ts_peak_attribution",  # NULL-user bucket ranks last on ties
@@ -276,10 +276,10 @@ def test_dup_conflict_parity(spark, dup_conflict_dir, name):
 #: (3) DECIMAL(18,4) fixed-scale renders overflowed (ANSI killed the
 #: whole job) — widened to DECIMAL(38,4), same text in-range;
 #: (4) two ORACLE bugs: DuckDB's 1-ulp HUGEINT→DOUBLE above 2^64
-#: reached by the squared-cents sums (VARCHAR hop, NOTES_r9 §3
-#: primitive) and the gaps-and-islands ROWS frame splitting phantom
-#: sessions on TIED timestamps (RANGE frame — peers share the
-#: island id).
+#: reached by the squared-cents sums (routed through VARCHAR, which
+#: both engines convert correctly rounded) and the gaps-and-islands
+#: ROWS frame splitting phantom sessions on TIED timestamps (RANGE
+#: frame — peers share the island id).
 CAP_GROUP_PARITY = [
     "agg_higher_moments",       # S4 limb split
     "agg_running_stats",        # oracle VARCHAR hop
@@ -431,7 +431,7 @@ def test_high_card_parity(spark, high_card_dir, name):
     _assert_parity(spark, high_card_dir, name, "every-row-its-own-key")
 
 
-#: SAME-INSTANT corpus (round 10, NOTES_r10 §8 candidate #1): every
+#: SAME-INSTANT corpus (round 10): every
 #: event carries the SAME timestamp — a batch-loaded backfill whose
 #: source system stamped load time, not event time. Stresses every
 #: ORDER BY ts tiebreak at once (lag/lead, asof joins, SCD2, OHLC,
@@ -471,7 +471,7 @@ def test_tied_clock_parity(spark, tied_clock_dir, name):
     _assert_parity(spark, tied_clock_dir, name, "same-instant corpus")
 
 
-#: MULTI-FILE PARQUET LAYOUT (round 10, NOTES_r10 §8 candidate #2):
+#: MULTI-FILE PARQUET LAYOUT (round 10):
 #: every table is a DIRECTORY of 4 part files, one of them written
 #: 0-row where the table is small — the 100 TB reality (no production
 #: table is one file; empty parts are routine compaction output).
@@ -907,8 +907,7 @@ def test_null_keys_corpus_parity(spark, null_keys_dir, name):
 @pytest.fixture(scope="module")
 def null_payload_dir(tmp_path_factory) -> str:
     """sf0.001 with every third props/text/embedding NULLed (keys and
-    measures intact) — the fixture the round-7 NULL-payload sweep ran;
-    full-registry result recorded in NOTES_r7 §6."""
+    measures intact) — the fixture the round-7 NULL-payload sweep ran."""
     return _build_fixture(tmp_path_factory, "sf_nulls", {
         "events": "event_id, ts, user_id, event_type, value, "
         "CASE WHEN event_id % 3 = 0 THEN NULL ELSE props END AS props",

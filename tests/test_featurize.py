@@ -124,7 +124,7 @@ def test_kmv_jaccard_tracks_exact(spark, sf_dir):
 def test_ohlc_open_close_match_brute_force(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
-        "event_type", ts_micros(ev).alias("us"), "event_id", "value"
+        "event_type", ts_micros().alias("us"), "event_id", "value"
     ).withColumn("bar", F.expr(f"us DIV {BAR_US}"))
     pdf = e.filter(F.col("event_type") == "click").toPandas()
     got = {
@@ -145,7 +145,7 @@ def test_ohlc_open_close_match_brute_force(spark, sf_dir):
 def test_attribution_last_touch_brute_force(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     pdf = (
-        ev.select("user_id", ts_micros(ev).alias("us"), "event_id", "event_type")
+        ev.select("user_id", ts_micros().alias("us"), "event_id", "event_type")
         .toPandas()
         .sort_values(["user_id", "us", "event_id"])
     )
@@ -177,7 +177,7 @@ def test_sliding_dau_brute_force(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     ud = (
-        ev.select("user_id", F.to_date(ts_timestamp(ev)).alias("day"))
+        ev.select("user_id", F.to_date(ts_timestamp()).alias("day"))
         .distinct()
         .toPandas()
     )
@@ -249,7 +249,7 @@ def test_hll_intersect_error_bounds(spark):
 
     sf_dir = "/root/testdata/sf0.01"
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(ts_micros(ev) / F.lit(86_400_000_000)).cast("long")
+    day = F.floor(ts_micros() / F.lit(86_400_000_000)).cast("long")
     ud = ev.select(
         F.col("event_type").alias("t"),
         F.concat(F.col("user_id").cast("string"), F.lit(":"), day.cast("string")).alias("u"),
@@ -281,7 +281,7 @@ def test_join_asof_nearest_vs_brute(spark, sf_dir):
 
     ev_raw = load_table(spark, sf_dir, "events")
     events = ev_raw.select(
-        "user_id", ts_micros(ev_raw).alias("us"), "event_id"
+        "user_id", ts_micros().alias("us"), "event_id"
     ).collect()
     by_user = {}
     for r in events:

@@ -42,7 +42,7 @@ ARROW_PYTHON_OK = {
     "mm_feature_extract",
     "mm_audio_chunk",
     "mm_phash_dedup",
-    "mm_byte_histogram",  # map-only Arrow np.bincount pass (NOTES_r7 §2.6)
+    "mm_byte_histogram",  # map-only Arrow np.bincount pass
     "udf_surface",
     "udtf_chunk_docs",  # Arrow Python UDTF is the point of the query
 }

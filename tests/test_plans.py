@@ -9,6 +9,7 @@ and whole-stage codegen in the hot paths.
 from __future__ import annotations
 
 from spark_streaming_stream_analyzer_spark import registry
+from spark_streaming_stream_analyzer_spark.sources.tables import load_table
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
@@ -155,6 +156,17 @@ def test_event_time_pack_prunes_and_aggregates_once(spark, sf_dir):
     # one partial/final pair -> exactly one shuffle, no Python
     assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
     assert "EvalPython" not in plan
+
+
+def test_events_clock_window_pushed_to_scan(spark, sf_dir):
+    """The events ingest clock window (``clean_measurements``) reaches
+    the parquet scan as both ``ts`` bounds, so out-of-window row groups
+    are skipped and no per-row conversion runs above the scan."""
+    df = load_table(spark, sf_dir, "events")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters")[1].split("\n")[0]
+    assert "GreaterThanOrEqual(ts,1990-01-01T00:00)" in pushed
+    assert "LessThan(ts,2100-01-01T00:00)" in pushed
 
 
 def test_rolling_window_single_shuffle(spark, sf_dir):

@@ -274,7 +274,7 @@ def test_rolling_1h_matches_bruteforce(spark, sf_dir):
     }
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select(
-        "user_id", "event_id", ts_micros(ev).alias("us"), "value"
+        "user_id", "event_id", ts_micros().alias("us"), "value"
     ).collect()
     by_user: dict[int, list] = {}
     for r in rows:
@@ -341,7 +341,7 @@ def test_pareto_front_vs_quadratic(spark, sf_dir):
         for r in od.select(
             "o_orderkey",
             F.col("o_totalprice").alias("p"),
-            ts_micros(od, "o_orderdate").alias("us"),
+            ts_micros("o_orderdate").alias("us"),
         ).collect()
     ]
     expect = set()

@@ -36,17 +36,23 @@ BASE_NS = 1_704_067_200 * NS
 BASE_US = BASE_NS // 1000
 
 
+def _ts_us(ns) -> pd.Series:
+    """Epoch-nanos as the fixtures' parquet ``timestamp[us]`` column."""
+    return pd.to_datetime(ns, unit="ns").astype("datetime64[us]")
+
+
 def _write_event_files(spark, tmpdir: str, batches: list[list[tuple]]) -> str:
     """Write each batch as one parquet file (one micro-batch each).
     ``ts`` values are offsets in nanos; the valid-clock base is added
-    here so every crafted row survives the ingest contract."""
+    here so every crafted row survives the ingest contract, and the
+    column is written as ``timestamp[us]``."""
     src = os.path.join(tmpdir, f"src_{uuid.uuid4().hex[:8]}")
     os.makedirs(src)
     for i, rows in enumerate(batches):
         pdf = pd.DataFrame(
             rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
         )
-        pdf["ts"] = pdf["ts"] + BASE_NS
+        pdf["ts"] = _ts_us(pdf["ts"] + BASE_NS)
         pdf.to_parquet(os.path.join(src, f"{i:04d}.parquet"), index=False)
     return src
 
@@ -107,7 +113,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     stream = events_file_stream(spark, src)
     from spark_streaming_stream_analyzer_spark.sources.tables import ts_timestamp
 
-    with_ts = stream.withColumn("ev_ts", ts_timestamp(stream))
+    with_ts = stream.withColumn("ev_ts", ts_timestamp())
     counts = (
         with_ts.withWatermark("ev_ts", "1 hour")
         .groupBy(F.window("ev_ts", "1 day"))
@@ -357,14 +363,12 @@ def test_custom_sessionizer_multibatch_carry(spark, tmp_path):
     ]
     src = _write_event_files(spark, str(tmp_path), [b1, b2])
     ev = events_file_stream(spark, src)
-    # the test frames carry ts as bigint nanos (written by pandas from
-    # int), so micros = ts DIV 1000 — mirror stream_sessionize_custom's
-    # projection via the adaptive helper
+    # mirror stream_sessionize_custom's projection: ts as epoch-micros
     from spark_streaming_stream_analyzer_spark.sources.tables import ts_micros
 
     proj = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("c"),
@@ -432,7 +436,7 @@ def test_stream_attribution_carries_click_across_batches(spark, tmp_path):
     ev = events_file_stream(spark, src)
     proj = ev.select(
         "user_id",
-        ts_micros(ev).alias("us"),
+        ts_micros().alias("us"),
         "event_id",
         "event_type",
     ).filter(F.col("event_type").isin("click", "purchase"))
@@ -475,6 +479,7 @@ def test_cdc_apply_tombstone_semantics(spark, tmp_path):
         rows,
         columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
     )
+    pdf["ts"] = _ts_us(pdf["ts"])
     pdf.to_parquet(str(tmp_path / "events.parquet"), index=False)
     got = {
         r["user_id"]: (r["last_us"], r["last_event_id"], r["last_value"])
@@ -549,7 +554,7 @@ def test_stream_seq_pattern_cross_batch_carry(spark, tmp_path):
     src = _write_event_files(spark, str(tmp_path), [b1, b2])
     ev = events_file_stream(spark, src)
     proj = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     )
     out = proj.groupBy("user_id").applyInPandasWithState(
         _seqp_update,
@@ -629,7 +634,7 @@ def test_stream_cusum_cross_batch_carry(spark, tmp_path):
     src = _write_event_files(spark, str(tmp_path), [b1, b2])
     ev = events_file_stream(spark, src)
     proj = ev.select(
-        "event_type", ts_micros(ev).alias("us"), "event_id", "value"
+        "event_type", ts_micros().alias("us"), "event_id", "value"
     )
     out = proj.groupBy("event_type").applyInPandasWithState(
         _cusum_update,
@@ -694,7 +699,7 @@ def test_stream_transitions_cross_batch_carry(spark, tmp_path):
     src = _write_event_files(spark, str(tmp_path), [b1, b2])
     ev = events_file_stream(spark, src)
     proj = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type"
+        "user_id", ts_micros().alias("us"), "event_id", "event_type"
     )
     out = proj.groupBy("user_id").applyInPandasWithState(
         _trans_update,
@@ -794,6 +799,8 @@ def test_stream_pareto_front_multibatch_dominance(spark, tmp_path):
         [(3, 12, "O", 200.0, 2 * day, "A")],
         columns=b1.columns,
     )
+    for b in (b1, b2):
+        b["o_orderdate"] = _ts_us(b["o_orderdate"])
     src = os.path.join(str(tmp_path), "orders_stream")
     os.makedirs(src)
     b1.to_parquet(os.path.join(src, "0000.parquet"), index=False)
@@ -837,7 +844,7 @@ def test_stream_new_users_cross_batch(spark, tmp_path):
     ]
     src = _write_event_files(spark, str(tmp_path), [b1, b2])
     ev = events_file_stream(spark, src)
-    proj = ev.select("user_id", ts_micros(ev).alias("us"))
+    proj = ev.select("user_id", ts_micros().alias("us"))
     out = proj.groupBy("user_id").applyInPandasWithState(
         _newu_update,
         outputStructType=NEWU_OUTPUT_SCHEMA,
@@ -926,7 +933,7 @@ def test_stream_user360_boundary_carries(spark, tmp_path):
     src = _write_event_files(spark, str(tmp_path), [b1, b2])
     ev = events_file_stream(spark, src)
     proj = ev.select(
-        "user_id", ts_micros(ev).alias("us"), "event_id", "event_type",
+        "user_id", ts_micros().alias("us"), "event_id", "event_type",
         "value",
     )
     out = proj.groupBy("user_id").applyInPandasWithState(
@@ -969,6 +976,8 @@ def test_stream_kanon_fold_then_floor(spark, tmp_path):
         [(i, BASE_NS + i * NS, 2, "a", 1.0, "{}") for i in range(3, 6)],
         columns=cols,
     )
+    for b in (b1, b2):
+        b["ts"] = _ts_us(b["ts"])
     src = os.path.join(str(tmp_path), "ev_stream")
     os.makedirs(src)
     b1.to_parquet(os.path.join(src, "0000.parquet"), index=False)

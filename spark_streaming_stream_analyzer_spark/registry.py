@@ -970,9 +970,9 @@ query("stream_freshness_watermark", _ft.DQ_FRESHNESS_SQL)(
 )
 query("stream_hll_distinct", _sp.STREAM_HLL_SQL)(_sp.stream_hll_distinct)
 query("stream_column_profile", _sp.STREAM_PROFILE_SQL)(_sp.stream_column_profile)
-query("stream_pareto_front", _sp.STREAM_PARETO_SQL)(_sp.stream_pareto_front)
-query("stream_cms_topk", _sp.STREAM_CMS_SQL)(_sp.stream_cms_topk)
-query("stream_kanon_cells", _sp.STREAM_KANON_SQL)(_sp.stream_kanon_cells)
+query("stream_pareto_front", _rel.SORT_PARETO_SQL)(_sp.stream_pareto_front)
+query("stream_cms_topk", _an.CMS_SQL)(_sp.stream_cms_topk)
+query("stream_kanon_cells", _au.PRIVACY_KANON_SQL)(_sp.stream_kanon_cells)
 query("stream_dedup", _sp.STREAM_DEDUP_SQL)(_sp.stream_dedup)
 query("stream_dedup_watermark", _sp.STREAM_DEDUP_WM_SQL)(_sp.stream_dedup_watermark)
 query("stream_stream_left_join", _sp.STREAM_STREAM_LEFT_SQL)(
@@ -1103,15 +1103,13 @@ _KEYED_DOCUMENTS_ORACLES = {
 }
 
 
-def _shadow_keyed_documents(sql: str) -> str:
-    """Prepend a CTE shadowing ``documents`` with its identity-keyed
-    projection (``tables.load_documents_keyed``): NULL ``doc_id`` rows
-    dropped in both engines. Same WITH-merge discipline as the events
-    and embeddings shadows."""
-    cte = (
-        "documents AS (SELECT * FROM main.documents"
-        " WHERE doc_id IS NOT NULL)"
-    )
+def _prepend_cte(sql: str, cte: str) -> str:
+    """Make ``cte`` the first CTE of ``sql``, merged into its own
+    ``WITH`` / ``WITH RECURSIVE`` when it has one. Leading ``-- ...``
+    comment lines are kept ahead of it and skipped for the prefix
+    checks: a comment-prefixed ``WITH x AS ...`` oracle would otherwise
+    miss the startswith and get a second WITH injected ahead of it
+    (hard binder error; round-8 review)."""
     lines = sql.lstrip().splitlines()
     head = []
     while lines and lines[0].lstrip().startswith("--"):
@@ -1126,6 +1124,17 @@ def _shadow_keyed_documents(sql: str) -> str:
     if s.upper().startswith("WITH"):
         return prefix + "WITH " + cte + ", " + s[len("WITH"):].lstrip()
     return prefix + "WITH " + cte + " " + s
+
+
+def _shadow_keyed_documents(sql: str) -> str:
+    """Prepend a CTE shadowing ``documents`` with its identity-keyed
+    projection (``tables.load_documents_keyed``): NULL ``doc_id`` rows
+    dropped in both engines."""
+    return _prepend_cte(
+        sql,
+        "documents AS (SELECT * FROM main.documents"
+        " WHERE doc_id IS NOT NULL)",
+    )
 
 
 def _shadow_finite_events(sql: str, shallow_props: bool = False) -> str:
@@ -1161,29 +1170,12 @@ def _shadow_finite_events(sql: str, shallow_props: bool = False) -> str:
             f", CASE WHEN {_props_depth_sql()}"
             f" <= {PROPS_JSON_MAX_DEPTH} THEN props END AS props"
         )
-    cte = (
+    return _prepend_cte(
+        sql,
         f"events AS (SELECT * REPLACE ({repl}) FROM main.events"
         f" WHERE epoch_us(ts) >= {EVENT_TS_VALID_MIN_US}"
-        f" AND epoch_us(ts) < {EVENT_TS_VALID_MAX_US})"
+        f" AND epoch_us(ts) < {EVENT_TS_VALID_MAX_US})",
     )
-    # strip leading `-- ...` comment lines before the prefix checks: a
-    # comment-prefixed `WITH x AS ...` oracle would otherwise miss the
-    # startswith and get a second WITH injected ahead of it (hard
-    # binder error on the NEXT comment-styled oracle; round-8 review)
-    lines = sql.lstrip().splitlines()
-    head = []
-    while lines and lines[0].lstrip().startswith("--"):
-        head.append(lines.pop(0))
-    s = "\n".join(lines).lstrip()
-    prefix = ("\n".join(head) + "\n") if head else ""
-    if s.upper().startswith("WITH RECURSIVE"):
-        return (
-            prefix + "WITH RECURSIVE " + cte + ", "
-            + s[len("WITH RECURSIVE"):].lstrip()
-        )
-    if s.upper().startswith("WITH"):
-        return prefix + "WITH " + cte + ", " + s[len("WITH"):].lstrip()
-    return prefix + "WITH " + cte + " " + s
 
 
 def _apply_finite_events_shadow() -> None:

@@ -7,24 +7,27 @@ Structured Streaming's unified API: the *same* transformation bodies
 as the batch operators (``operators/stats.py``, ``operators/
 wordcount.py``), wired to streaming sources/sinks:
 
- - source: file stream over the fixture parquet (tests / driver);
-   ``kafka_source`` shows the production wiring
-   (``spark.readStream.format("kafka")``) but is not exercised here —
-   no broker in the container.
+ - source: ``events_file_stream``, a file stream over any fixture
+   table (tests / driver); ``kafka_source`` shows the production
+   wiring (``spark.readStream.format("kafka")``) but is not exercised
+   here — no broker in the container.
  - running stats: ``groupBy(key).agg(...)`` under ``complete`` /
    ``update`` output mode — Catalyst's StateStoreSave/Restore replaces
    ``updateStateByKey`` (state in RocksDB at scale).
  - word count: event-time tumbling window + watermark (the
    declaratively-expressible form, SURVEY.md Q2); exact
-   per-processing-time-batch parity via ``foreachBatch`` in
-   ``tests/test_streaming.py``.
+   per-processing-time-batch parity via ``foreachBatch``.
  - sink: ``to_json(struct(...))`` Kafka-record shape (op #8); memory
-   sink for verification; checkpointing (op #16) on every query.
+   sink for verification (``_run_to_memory``); per-batch parquet folds
+   (``_fold_batches``).
 
-Streaming results are verified two ways: pytest semantics tests
-(multi-batch update-mode emission), and driver oracle queries — the
-streaming query runs with ``trigger(availableNow=True)`` to completion
-and its final table must equal the batch/DuckDB answer (the prefix
+Every package stream starts in one place, ``_drain``: it sets the
+checkpoint (op #16; a tracked tmp dir unless the caller owns one) and
+the trigger (``availableNow`` unless given), runs the query to
+completion, and stops it on every path, failures included. Streaming
+results are verified two ways: pytest semantics tests (multi-batch
+update-mode emission), and driver oracle queries — the drained
+query's final table must equal the batch/DuckDB answer (the prefix
 guarantee of the unified model).
 """
 
@@ -34,10 +37,12 @@ import atexit
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..operators.stats import STAT_COLS, running_stats, stats_oracle_sql
 from ..sources.tables import (
@@ -93,8 +98,6 @@ def _stage_stream_dir(*files: str, force_order: bool = False) -> str:
     carries time semantics must force mtimes (round-10 MULTIFILE
     sweep — out-of-order batches silently corrupted every stateful
     kernel's carried state)."""
-    import shutil
-
     d = _tracked_tmp_dir("sgs_src")
     os.makedirs(d)
     # fixed epoch base: deterministic across runs. Safe against
@@ -134,13 +137,14 @@ def events_file_stream(
     copies: int = 1,
     batch_per_pass: bool = False,
 ) -> DataFrame:
-    """File-based streaming source over the events fixture — the test
+    """File-based streaming source over a fixture table — the test
     stand-in for the Kafka receiver (op #1), one file per micro-batch.
-    ``path`` may be a single parquet file (staged into a dir) or a
-    directory of parts. ``copies`` stages the source N times (N full
-    passes) for replay-shaped tests. The stream schema is read from
-    the parquet footer, so ts streams as the table's timestamp[us]
-    column, as ``load_table`` reads it.
+    It serves any table (events, documents, orders, ...): ``path`` may
+    be a single parquet file (staged into a dir) or a directory of
+    parts. ``copies`` stages the source N times (N full passes) for
+    replay-shaped tests. The stream schema is read from the parquet
+    footer, so a timestamp streams as the table's timestamp[us] column,
+    as ``load_table`` reads it.
 
     A multi-part directory is ALWAYS re-staged with forced mtimes —
     the source orders batches by ms-granularity mtime, not name, so a
@@ -158,9 +162,9 @@ def events_file_stream(
         .option("maxFilesPerTrigger", len(parts) if batch_per_pass else 1)
         .parquet(path)
     )
-    # streaming twin of load_table's finite-measurement contract: a
-    # NaN/Inf reading is a missing reading (sources/tables.py
-    # clean_measurements — identity when no value column / all finite)
+    # streaming twin of load_table's events ingest contract
+    # (sources/tables.py clean_measurements): identity on a table with
+    # no ts or value column
     from ..sources.tables import clean_measurements
 
     return clean_measurements(stream)
@@ -203,43 +207,75 @@ def kafka_record(stats_df: DataFrame) -> DataFrame:
     )
 
 
+def _drain(
+    writer: DataStreamWriter,
+    *,
+    trigger: dict | None = None,
+    checkpoint_dir: str | None = None,
+    until=None,
+) -> StreamingQuery:
+    """Start ``writer`` and run its query to completion: the package's
+    one ``.start()``. Without ``checkpoint_dir`` a tracked tmp
+    checkpoint is used and removed once the query is stopped. ``trigger``
+    defaults to availableNow, which is drained by ``awaitTermination``.
+    Any other trigger is drained by ``processAllAvailable``, or, given
+    ``until``, by polling it every 0.5 s: a query that dies meanwhile
+    raises its own exception, and one that never satisfies ``until``
+    raises ``TimeoutError`` after 120 s. The query is stopped on every
+    path; the stopped query is returned (``recentProgress`` etc.).
+    """
+    own_ckpt = [] if checkpoint_dir else [_tracked_tmp_dir("sgs_ckpt")]
+    trigger = trigger or {"availableNow": True}
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint_dir or own_ckpt[0])
+            .trigger(**trigger)
+            .start()
+        )
+        try:
+            if trigger.get("availableNow"):
+                q.awaitTermination()
+            elif until is None:
+                q.processAllAvailable()
+            else:
+                deadline = time.monotonic() + 120
+                while not until():
+                    if (err := q.exception()) is not None:
+                        raise err
+                    if time.monotonic() > deadline:
+                        raise TimeoutError(
+                            f"stream {q.name or q.id}: stop condition "
+                            "not met after 120 s"
+                        )
+                    time.sleep(0.5)
+        finally:
+            q.stop()
+    finally:
+        _cleanup_tmp_dirs(own_ckpt)
+    return q
+
+
 def _run_to_memory(
     df: DataFrame,
     *,
     output_mode: str,
     checkpoint_dir: str | None = None,
     trigger: dict | None = None,
+    until=None,
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion into a memory sink;
-    return the sink table as a batch DataFrame on the stream's session.
-    Without ``checkpoint_dir`` a tracked tmp checkpoint is used and
-    removed once the query drains. ``trigger`` defaults to
-    availableNow; a processingTime trigger is stopped after the source
-    is drained (``processAllAvailable``).
-    """
+    """Drain a streaming DataFrame into a memory sink (``_drain``'s
+    checkpoint, trigger and stop rules); return the sink table as a
+    batch DataFrame on the stream's session. ``until(sink_df) -> bool``
+    is the stop condition of a stream that ``processAllAvailable``
+    cannot drain."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    own_ckpt = [] if checkpoint_dir else [_tracked_tmp_dir("sgs_ckpt")]
-    trigger = trigger or {"availableNow": True}
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir or own_ckpt[0])
-            .trigger(**trigger)
-            .start()
-        )
-        if trigger.get("availableNow"):
-            q.awaitTermination()
-        else:
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-    finally:
-        # the memory sink holds the rows; a drained query's auto
-        # checkpoint has no further reader
-        _cleanup_tmp_dirs(own_ckpt)
+    _drain(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        trigger=trigger,
+        checkpoint_dir=checkpoint_dir,
+        until=None if until is None else lambda: until(spark.table(name)),
+    )
     return spark.table(name)
 
 
@@ -562,34 +598,21 @@ def stream_batch_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver state is O(1) and the per-batch write is the same
     map-side-combined aggregate shape as the CDC upsert sink below.
     """
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    # parts-aware staging: one batch = one full pass of the corpus
-    # even when documents is a multi-part directory (round-10
-    # MULTIFILE sweep — symlinking the directory itself staged zero
-    # readable files and the per-batch fold had nothing to concat)
-    parts = _parquet_parts(docs_path)
-    src = _stage_stream_dir(*(parts * 2), force_order=len(parts) > 1)
-    docs_schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", len(parts))
-        .parquet(src)
+    from ..operators.wordcount import word_count
+
+    # batch_per_pass: one batch = one full pass of the corpus even when
+    # documents is a multi-part directory (round-10 MULTIFILE sweep)
+    stream = events_file_stream(
+        spark, os.path.join(sf_dir, "documents.parquet"), copies=2,
+        batch_per_pass=True,
     )
-    # per-batch sink dir outlives this function (the returned frame
-    # reads it lazily) — cleaned at process exit like staged sources
-    store_dir = _tracked_tmp_dir("sgs_fb_store")
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.wordcount import word_count
-
-        (
-            word_count(batch_df, "text")
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .parquet(store_dir)
-        )
-
-    _run_foreachbatch(stream, per_batch, "sgs_fb")
+    store_dir = _fold_batches(
+        stream,
+        lambda batch_df, batch_id: word_count(batch_df, "text").withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
+        ),
+        "sgs_fb",
+    )
     # explicit schema: an all-empty-batch run leaves only zero-row
     # parts, and schema'd read keeps that case inference-proof
     return spark.read.schema("word string, cnt long, batch_id long").parquet(
@@ -897,47 +920,28 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate under a processing-time trigger; the query is stopped
     once the sink shows every generated row (availableNow snapshots
     only the first offset of a Python simple reader, so draining is
-    poll-based — the ``stream_stats_heartbeat`` pattern). The offset
-    dict is checkpointed like any source's, so recovery replays
-    exactly. ``sf_dir`` is unused: the source is the data.
+    poll-based, as in ``stream_stats_heartbeat``). The offset dict is
+    checkpointed like any source's, so recovery replays exactly.
+    ``sf_dir`` is unused: the source is the data.
     """
-    import time as _time
-
     spark.dataSource.register(_pystream_source())
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = _tracked_tmp_dir("sgs_pys")
     total = PYSTREAM_BATCHES * PYSTREAM_ROWS
-    try:
-        stream = spark.readStream.format("pystream_readings").load()
-        agg = stream.groupBy("tag").agg(
+    agg = (
+        spark.readStream.format("pystream_readings").load()
+        .groupBy("tag")
+        .agg(
             F.count("*").alias("n"),
             F.sum(F.round(F.col("reading") * 100).cast("long")).alias("sum_cents"),
             F.min("reading").alias("min_reading"),
             F.max("reading").alias("max_reading"),
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            deadline = _time.time() + 120
-            while _time.time() < deadline:
-                got = spark.table(name).agg(F.sum("n")).collect()[0][0]
-                if got == total:
-                    break
-                _time.sleep(0.5)
-            else:
-                raise TimeoutError("python stream source did not drain")
-        finally:
-            q.stop()
-            q.awaitTermination()
-    finally:
-        _cleanup_tmp_dirs([ckpt])
-    return spark.table(name)
+    )
+    return _run_to_memory(
+        agg,
+        output_mode="complete",
+        trigger={"processingTime": "1 second"},
+        until=lambda sink: sink.agg(F.sum("n")).collect()[0][0] == total,
+    )
 
 
 STREAM_PYSRC_SQL = f"""
@@ -1009,25 +1013,12 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_per_pass=True,
     )
     counted = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = _tracked_tmp_dir("sgs_prog")
-    try:
-        q = (
-            counted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = [
-            (int(p["batchId"]), int(p["numInputRows"]))
-            for p in q.recentProgress
-            if int(p["numInputRows"]) > 0
-        ]
-    finally:
-        _cleanup_tmp_dirs([ckpt])
+    q = _drain(counted.writeStream.format("noop").outputMode("complete"))
+    rows = [
+        (int(p["batchId"]), int(p["numInputRows"]))
+        for p in q.recentProgress
+        if int(p["numInputRows"]) > 0
+    ]
     return spark.createDataFrame(
         rows, schema="batch_id long, num_input_rows long"
     )
@@ -1056,8 +1047,6 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once per batch; the read-back aggregate must equal the
     batch query. Partitioned by event_type so downstream key-filtered
     reads prune directories."""
-    import shutil
-
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
     shaped = events.filter(F.col("value") > 0).select(
         "event_id",
@@ -1067,18 +1056,13 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "value",
     )
-    out_dir = os.path.join(tempfile.gettempdir(), f"sgs_fsink_{uuid.uuid4().hex[:12]}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"sgs_fsink_ck_{uuid.uuid4().hex[:12]}")
+    out_dir = _tracked_tmp_dir("sgs_fsink")
     try:
-        q = (
+        _drain(
             shaped.writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
             .partitionBy("event_type")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         # explicit schema: a zero-row stream commits only the
         # _spark_metadata log — nothing to infer from (and a lake
         # reader should declare its schema anyway)
@@ -1089,8 +1073,7 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         pdf = agg.toPandas()
     finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        _cleanup_tmp_dirs([out_dir])
     return spark.createDataFrame(pdf, schema=agg.schema)
 
 
@@ -1162,23 +1145,19 @@ def stream_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(record, output_mode="complete")
 
 
-def _run_foreachbatch(stream: DataFrame, fn, tag: str) -> None:
-    """Drain a file-backed stream through ``foreachBatch(fn)`` with the
-    shared runner discipline: a tracked checkpoint dir, availableNow
-    trigger, blocking awaitTermination, checkpoint cleanup. Factored
-    from eight identical inline copies — one edit point for the runner
-    semantics."""
-    ckpt = _tracked_tmp_dir(tag)
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        _cleanup_tmp_dirs([ckpt])
+def _fold_batches(stream: DataFrame, partial, tag: str) -> str:
+    """Drain ``stream`` through ``foreachBatch``, appending each
+    micro-batch's ``partial(batch_df, batch_id)`` frame to a parquet
+    store; return the store dir for the caller's serve-time fold. The
+    dir outlives this call (the caller's frame reads it lazily) and is
+    removed at process exit, like the staged sources."""
+    store_dir = _tracked_tmp_dir(f"{tag}_store")
+
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        partial(batch_df, batch_id).write.mode("append").parquet(store_dir)
+
+    _drain(stream.writeStream.foreachBatch(append))
+    return store_dir
 
 
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,20 +1180,16 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet"), copies=2
     )
-    # store dir outlives this function (the returned frame reads it
-    # lazily) — cleaned at process exit like the staged source dirs
-    store_dir = _tracked_tmp_dir("sgs_ups_store")
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        latest = (
+    def upsert(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
             batch_df.withColumn("us", ts_micros())
             .groupBy("user_id")
             .agg(F.max(F.struct("us", "event_id", "value")).alias("s"))
             .select("user_id", "s.us", "s.event_id", "s.value")
         )
-        latest.write.mode("append").parquet(store_dir)
 
-    _run_foreachbatch(stream, upsert, "sgs_ups")
+    store_dir = _fold_batches(stream, upsert, "sgs_ups")
     # merge-on-read: per-key argmax over the union of batch deltas.
     # One shuffle on user_id; struct-max keeps it a single aggregate.
     return (
@@ -1326,10 +1301,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet"), copies=2
     )
-    store_dir = _tracked_tmp_dir("sgs_cdc_store")
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = (
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
             batch_df.withColumn("us", ts_micros())
             .withColumn(
                 "op",
@@ -1341,9 +1315,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(F.struct("us", "event_id", "op", "value")).alias("s"))
             .select("user_id", "s.us", "s.event_id", "s.op", "s.value")
         )
-        latest.write.mode("append").parquet(store_dir)
 
-    _run_foreachbatch(stream, apply_batch, "sgs_cdc")
+    store_dir = _fold_batches(stream, apply_batch, "sgs_cdc")
     return (
         spark.read.parquet(store_dir)
         .groupBy("user_id")
@@ -1389,17 +1362,15 @@ def stream_freshness_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet"), copies=2
     )
-    store_dir = _tracked_tmp_dir("sgs_fresh_store")
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = (
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
             batch_df.withColumn("us", ts_micros())
             .groupBy("event_type")
             .agg(F.max("us").alias("latest_us"), F.count("*").alias("n"))
         )
-        part.write.mode("append").parquet(store_dir)
 
-    _run_foreachbatch(stream, fold_batch, "sgs_fresh")
+    store_dir = _fold_batches(stream, fold_batch, "sgs_fresh")
     # counts fold additively, so the 2x fixture replay doubles them —
     # normalize by the known replay factor; max() is replay-idempotent
     # and needs nothing. The deltas stay pure partial aggregates.
@@ -1444,23 +1415,21 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet"), copies=2
     )
-    store_dir = _tracked_tmp_dir("sgs_hll_store")
 
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def sketch_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # per-row coordinates come from the ONE shared definition in
         # functions/hashing.py — bit-parity with the batch sketch is
         # the module's guarantee, not a coincidence of two copies
         bucket, rho = hll_bucket_rho(F.col("user_id").cast("string"))
-        part = (
+        return (
             batch_df.select(
                 "event_type", bucket.alias("bkt"), rho.alias("rho")
             )
             .groupBy("event_type", "bkt")
             .agg(F.max("rho").alias("max_rho"))
         )
-        part.write.mode("append").parquet(store_dir)
 
-    _run_foreachbatch(stream, sketch_batch, "sgs_hll")
+    store_dir = _fold_batches(stream, sketch_batch, "sgs_hll")
     merged = (
         spark.read.parquet(store_dir)
         .groupBy("event_type", "bkt")
@@ -1496,9 +1465,8 @@ def stream_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet")
     )
-    store_dir = _tracked_tmp_dir("sgs_prof_store")
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # partials stay in their NATIVE types (one wide row): a
         # string-rendered min would fold lexicographically ("100" <
         # "99") — rendering happens once, at serve time
@@ -1511,10 +1479,9 @@ def stream_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max(name).alias(f"mx_{name}"),
                 ]
             )
-        batch_df.agg(*aggs).write.mode("append").parquet(store_dir)
+        return batch_df.agg(*aggs)
 
-    _run_foreachbatch(stream, fold_batch, "sgs_prof")
-    store = spark.read.parquet(store_dir)
+    store = spark.read.parquet(_fold_batches(stream, fold_batch, "sgs_prof"))
     fold_aggs = [F.sum("n_rows").alias("n_rows")]
     for name, _render in _PROFILE_COLS:
         fold_aggs.extend(
@@ -1576,75 +1543,46 @@ def stream_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline that keeps unbounded-stream skyline state at frontier
     size, not stream size.
     """
-    from pyspark.sql import Window as W
-
     from ..functions.exact import cents
 
-    path = os.path.join(sf_dir, "orders.parquet")
-    schema = spark.read.parquet(path).schema
-    # parts-aware staging (round-10 MULTIFILE sweep): a multi-part
-    # orders directory streams one part per batch — the frontier fold
-    # is a monotone union, so batching and order are both immaterial
-    _sky_parts = _parquet_parts(path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stage_stream_dir(*_sky_parts))
-    )
-    store_dir = _tracked_tmp_dir("sgs_sky_store")
+    # a multi-part orders directory streams one part per batch: the
+    # frontier fold is a monotone union, so batching and order are
+    # both immaterial
+    stream = events_file_stream(spark, os.path.join(sf_dir, "orders.parquet"))
 
-    def local_frontier(df: DataFrame) -> DataFrame:
-        base = df.select(
-            "o_orderkey",
-            cents("o_totalprice").alias("price_c"),
-            ts_micros("o_orderdate").alias("us"),
-        ).select(
-            "o_orderkey", "price_c",
-            F.expr("us DIV 86400000000").alias("day"),
-        )
-        w_same = W.partitionBy("day")
-        cands = base.withColumn(
-            "max_same", F.max("price_c").over(w_same)
-        ).filter(F.col("price_c") >= F.col("max_same"))
-        w_before = W.orderBy("day").rangeBetween(W.unboundedPreceding, -1)
-        return (
-            cands.withColumn(
-                "max_before",
-                F.coalesce(F.max("price_c").over(w_before), F.lit(-1)),
+    def local_frontier(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return _frontier(
+            batch_df.select(
+                "o_orderkey",
+                cents("o_totalprice").alias("price_c"),
+                ts_micros("o_orderdate").alias("us"),
+            ).select(
+                "o_orderkey", "price_c",
+                F.expr("us DIV 86400000000").alias("day"),
             )
-            .filter(F.col("price_c") > F.col("max_before"))
-            .select("o_orderkey", "price_c", "day")
         )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        local_frontier(batch_df).write.mode("append").parquet(store_dir)
+    store_dir = _fold_batches(stream, local_frontier, "sgs_sky")
+    return _frontier(spark.read.parquet(store_dir))
 
-    _run_foreachbatch(stream, fold_batch, "sgs_sky")
-    cands = spark.read.parquet(store_dir)
-    from pyspark.sql import Window as W2
 
-    w_same = W2.partitionBy("day")
-    pruned = cands.withColumn(
-        "max_same", F.max("price_c").over(w_same)
-    ).filter(F.col("price_c") >= F.col("max_same"))
-    w_before = W2.orderBy("day").rangeBetween(W2.unboundedPreceding, -1)
+def _frontier(df: DataFrame) -> DataFrame:
+    """The price/day Pareto frontier of ``(o_orderkey, price_c, day)``
+    rows: a row survives when its price is the maximum of its day and
+    above every earlier day's maximum. Run per micro-batch and again
+    over the union of the batch frontiers."""
+    w_same = Window.partitionBy("day")
+    w_before = Window.orderBy("day").rangeBetween(Window.unboundedPreceding, -1)
     return (
-        pruned.withColumn(
+        df.withColumn("max_same", F.max("price_c").over(w_same))
+        .filter(F.col("price_c") >= F.col("max_same"))
+        .withColumn(
             "max_before",
             F.coalesce(F.max("price_c").over(w_before), F.lit(-1)),
         )
         .filter(F.col("price_c") > F.col("max_before"))
         .select("o_orderkey", "price_c", "day")
     )
-
-
-def _stream_sky_sql() -> str:
-    from ..operators.relational import SORT_PARETO_SQL
-
-    return SORT_PARETO_SQL
-
-
-STREAM_PARETO_SQL = _stream_sky_sql()
 
 
 def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1662,7 +1600,7 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.analytics import CMS_D, CMS_TOPK, CMS_W
     from ..operators.wordcount import tokenize
 
-    stream = events_file_stream(  # documents streamed via schema of docs
+    stream = events_file_stream(
         spark, os.path.join(sf_dir, "documents.parquet")
     )
     cnt_store = _tracked_tmp_dir("sgs_cms_counters")
@@ -1699,7 +1637,7 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("cnt")
         ).write.mode("append").parquet(cnt_store)
 
-    _run_foreachbatch(stream, fold_batch, "sgs_cms")
+    _drain(stream.writeStream.foreachBatch(fold_batch))
     counters = (
         spark.read.parquet(cnt_store)
         .groupBy("d", "bucket")
@@ -1727,15 +1665,6 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_cms_sql() -> str:
-    from ..operators.analytics import CMS_SQL
-
-    return CMS_SQL
-
-
-STREAM_CMS_SQL = _stream_cms_sql()
-
-
 def stream_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``auditing.privacy_kanon_cells``: the
     anonymized extract maintained live — per micro-batch the
@@ -1752,10 +1681,9 @@ def stream_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_file_stream(
         spark, os.path.join(sf_dir, "events.parquet")
     )
-    store_dir = _tracked_tmp_dir("sgs_kanon_store")
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells = (
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
             batch_df.select(
                 "event_type",
                 ts_micros().alias("us"),
@@ -1771,11 +1699,9 @@ def stream_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "day", "user_bucket")
             .agg(F.count("*").alias("n"), F.sum("cents").alias("sum_cents"))
         )
-        cells.write.mode("append").parquet(store_dir)
 
-    _run_foreachbatch(stream, fold_batch, "sgs_kanon")
     cells = (
-        spark.read.parquet(store_dir)
+        spark.read.parquet(_fold_batches(stream, fold_batch, "sgs_kanon"))
         .groupBy("event_type", "day", "user_bucket")
         .agg(F.sum("n").alias("n"), F.sum("sum_cents").alias("sum_cents"))
     )
@@ -1793,12 +1719,3 @@ def stream_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_suppressed_cells", "n_suppressed_rows",
         )
     )
-
-
-def _stream_kanon_sql() -> str:
-    from ..operators.auditing import PRIVACY_KANON_SQL
-
-    return PRIVACY_KANON_SQL
-
-
-STREAM_KANON_SQL = _stream_kanon_sql()

@@ -18,15 +18,17 @@ oracle is exactly Structured Streaming's prefix-consistency contract.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.stats import running_stats, stats_oracle_sql
-from .pipelines import _run_to_memory, events_file_stream
+from .pipelines import (
+    _cleanup_tmp_dirs,
+    _run_to_memory,
+    _tracked_tmp_dir,
+    events_file_stream,
+)
 
 
 def trigger_microbatch_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,10 +62,9 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     )
 
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = os.path.join(tempfile.gettempdir(), f"sgs_ckpt_src_{run_id}")
-    stage_dir = os.path.join(tempfile.gettempdir(), f"sgs_ckpt_stage_{run_id}")
-    ckpt_dir = os.path.join(tempfile.gettempdir(), f"sgs_ckpt_dir_{run_id}")
+    src_dir = _tracked_tmp_dir("sgs_ckpt_src")
+    stage_dir = _tracked_tmp_dir("sgs_ckpt_stage")
+    ckpt_dir = _tracked_tmp_dir("sgs_ckpt_dir")
     os.makedirs(src_dir)
 
     def stage_half(name: str, predicate) -> None:
@@ -101,9 +102,7 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
             pipeline(), output_mode="complete", checkpoint_dir=ckpt_dir
         )
     finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        _cleanup_tmp_dirs([src_dir, stage_dir, ckpt_dir])
     return out
 
 

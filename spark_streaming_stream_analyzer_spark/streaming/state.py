@@ -36,7 +36,6 @@ path keeps per-batch Python overhead O(batch), not O(row).
 from __future__ import annotations
 
 import os
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -433,10 +432,8 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final row per key equals the batch answer regardless of how
     many heartbeats fired, so the batch oracle applies unchanged
     (``delta``, the order-dependent telemetry, is excluded)."""
-    import time as _time
-
     from ..sources.tables import clean_measurements
-    from .pipelines import _cleanup_tmp_dirs, _tracked_tmp_dir, events_file_stream
+    from .pipelines import _run_to_memory, events_file_stream
 
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
 
@@ -461,59 +458,29 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("value").cast("double").alias("exp_counter"))
         .collect()
     }
-    out = exact_state_stats_heartbeat(events, "event_type")
-    name = f"hb_{uuid.uuid4().hex[:8]}"
-    ckpt = _tracked_tmp_dir("sgs_hb")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="1 second")
-            .start()
-        )
+
+    def confirmed(sink: DataFrame) -> bool:
         # No processAllAvailable here: the timers make every idle
         # micro-batch emit rows, so "all available" never drains —
-        # poll the sink until every key has its data row plus at
-        # least one heartbeat re-emission, then stop.
-        deadline = _time.time() + 120
-        drained = False
-        n_done = 0
-        while _time.time() < deadline:
-            try:
-                per_key = (
-                    spark.table(name)
-                    .groupBy("readTag_id", "counter")
-                    .count()
-                    .collect()
-                )
-            except Exception:
-                per_key = []
-            done = {
-                r["readTag_id"]
-                for r in per_key
-                if expected.get(r["readTag_id"]) == r["counter"]
-                and r["count"] >= 2
-            }
-            n_done = len(done)
-            if n_done == len(expected):
-                drained = True
-                break
-            _time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-        if not drained:
-            # partial stats are a WRONG answer, not a slow one — fail
-            # loudly like stream_python_datasource's poll loop does
-            raise TimeoutError(
-                "stream_stats_heartbeat: sink incomplete after 120s "
-                f"({n_done}/{len(expected)} keys heartbeat-confirmed "
-                "at their final counter)"
-            )
-    finally:
-        _cleanup_tmp_dirs([ckpt])
-    return _final_emission(spark.table(name))
+        # stop once every key has its data row plus at least one
+        # heartbeat re-emission at its final counter.
+        per_key = sink.groupBy("readTag_id", "counter").count().collect()
+        done = {
+            r["readTag_id"]
+            for r in per_key
+            if expected.get(r["readTag_id"]) == r["counter"]
+            and r["count"] >= 2
+        }
+        return len(done) == len(expected)
+
+    return _final_emission(
+        _run_to_memory(
+            exact_state_stats_heartbeat(events, "event_type"),
+            output_mode="update",
+            trigger={"processingTime": "1 second"},
+            until=confirmed,
+        )
+    )
 
 
 STREAM_STATS_HEARTBEAT_SQL = STREAM_STATS_EXACT_SQL

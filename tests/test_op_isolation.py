@@ -4,8 +4,9 @@ Every registered op runs on its own ``session.op_session`` child, so a
 caller whose conf differs from the op settings (3 shuffle partitions, a
 non-UTC zone, nanosAsLong off) keeps exactly that conf, and no temp
 view or function an op registers shows up on it; the op still gets the
-oracle answer. Two ops run at once on one caller (two threads) must not
-clobber each other's settings or views either.
+oracle answer and leaves no stream running on its session. Two ops run
+at once on one caller (two threads) must not clobber each other's
+settings or views either.
 """
 
 from __future__ import annotations
@@ -63,7 +64,10 @@ def _state(s) -> dict:
 
 
 def _check(caller, sf_dir: str, name: str) -> None:
-    sdf = registry.QUERIES[name](caller, sf_dir).toPandas()
+    result = registry.QUERIES[name](caller, sf_dir)
+    # every stream the op started has been stopped, on every path
+    assert result.sparkSession.streams.active == []
+    sdf = result.toPandas()
     odf = _oracle(sf_dir, registry.ORACLES[name])
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf), f"{name}: spark {len(sdf)} vs oracle {len(odf)}"

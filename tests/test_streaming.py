@@ -70,6 +70,47 @@ def test_multibatch_stream_equals_batch(spark, tmp_path):
     assert out["b"]["counter"] == 1.0 and out["b"]["var"] == 0.0
 
 
+def test_poll_drained_stream_raises_its_own_error(spark, monkeypatch):
+    """A processing-time stream whose batch raises, drained by a stop
+    condition that never holds, must surface the query's own error
+    well before the 120 s poll deadline, stopped and with its
+    auto-checkpoint removed."""
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    import spark_streaming_stream_analyzer_spark.streaming.pipelines as sp
+    from spark_streaming_stream_analyzer_spark.session import op_session
+
+    made = []
+    real = sp._tracked_tmp_dir
+
+    def tracked(prefix):
+        made.append(real(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(sp, "_tracked_tmp_dir", tracked)
+    child = op_session(spark)
+    boom = (
+        child.readStream.format("rate").option("rowsPerSecond", 10).load()
+        .select(
+            F.when(F.col("value") >= 0, F.raise_error(F.lit("planted")))
+            .alias("x")
+        )
+    )
+    t0 = time.monotonic()
+    with pytest.raises(StreamingQueryException, match="planted"):
+        _run_to_memory(
+            boom,
+            output_mode="append",
+            trigger={"processingTime": "1 second"},
+            until=lambda sink: False,
+        )
+    assert time.monotonic() - t0 < 30
+    assert child.streams.active == []
+    assert made and not any(os.path.exists(d) for d in made)
+
+
 def test_foreachbatch_per_batch_wordcount(spark, tmp_path):
     """Q2: the reference's word count resets every micro-batch — that
     scoping is only expressible via foreachBatch; totals across batches
@@ -810,7 +851,7 @@ def test_stream_pareto_front_multibatch_dominance(spark, tmp_path):
 
     real_stage = sp._stage_stream_dir
 
-    def fake_stage(*paths):
+    def fake_stage(*paths, **_):
         return src
 
     with mock.patch.object(sp, "_stage_stream_dir", fake_stage):

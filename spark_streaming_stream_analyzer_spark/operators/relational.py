@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import avg_money, cents, cents_dec, sum_money
-from ..sources.tables import load_table, ts_micros, ts_timestamp
+from ..sources.tables import bcast_gated, load_table, ts_micros, ts_timestamp
 
 
 def _disc_price_cents2(ext, disc):
@@ -110,7 +110,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(
-            od.join(F.broadcast(cu), od.o_custkey == cu.c_custkey),
+            od.join(bcast_gated(cu, sf_dir, "customer"), od.o_custkey == cu.c_custkey),
             li.l_orderkey == od.o_orderkey,
         )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
@@ -166,7 +166,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
+        .join(bcast_gated(cu, sf_dir, "customer"), od.o_custkey == cu.c_custkey)
         .join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
         .filter(cu.c_nationkey == su.s_nationkey)
         .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
@@ -205,7 +205,7 @@ def join_broadcast_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     pa = load_table(spark, sf_dir, "part")
     return (
-        li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
+        li.join(bcast_gated(pa, sf_dir, "part"), li.l_partkey == pa.p_partkey)
         .groupBy("p_brand")
         .agg(
             sum_money("l_extendedprice").alias("brand_revenue"),

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table_cpu
+from ..sources.tables import load_table_cpu, prepend_cte
 
 N_QUERIES = 8  # vec_id < 8 are the query vectors
 TOP_K = 5
@@ -152,12 +152,7 @@ def _shadow_nonnull_embeddings(sql: str) -> str:
         " AND len(list_filter(embedding, x -> x IS NULL OR isnan(x)"
         f" OR abs(x) > {EMB_COMPONENT_ABS_MAX!r})) = 0)"
     )
-    s = sql.lstrip()
-    if s.upper().startswith("WITH RECURSIVE"):
-        return "WITH RECURSIVE " + cte + ", " + s[len("WITH RECURSIVE"):].lstrip()
-    if s.upper().startswith("WITH"):
-        return "WITH " + cte + ", " + s[len("WITH"):].lstrip()
-    return "WITH " + cte + " " + s
+    return prepend_cte(sql, cte)
 
 
 def _with_norm(df: DataFrame, emb: str, out: str) -> DataFrame:

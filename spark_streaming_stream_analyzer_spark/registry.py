@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .operators import projections, stats, wordcount
 from .session import op_session
-from .sources.tables import load_table
+from .sources.tables import load_table, prepend_cte
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1103,34 +1103,11 @@ _KEYED_DOCUMENTS_ORACLES = {
 }
 
 
-def _prepend_cte(sql: str, cte: str) -> str:
-    """Make ``cte`` the first CTE of ``sql``, merged into its own
-    ``WITH`` / ``WITH RECURSIVE`` when it has one. Leading ``-- ...``
-    comment lines are kept ahead of it and skipped for the prefix
-    checks: a comment-prefixed ``WITH x AS ...`` oracle would otherwise
-    miss the startswith and get a second WITH injected ahead of it
-    (hard binder error; round-8 review)."""
-    lines = sql.lstrip().splitlines()
-    head = []
-    while lines and lines[0].lstrip().startswith("--"):
-        head.append(lines.pop(0))
-    s = "\n".join(lines).lstrip()
-    prefix = ("\n".join(head) + "\n") if head else ""
-    if s.upper().startswith("WITH RECURSIVE"):
-        return (
-            prefix + "WITH RECURSIVE " + cte + ", "
-            + s[len("WITH RECURSIVE"):].lstrip()
-        )
-    if s.upper().startswith("WITH"):
-        return prefix + "WITH " + cte + ", " + s[len("WITH"):].lstrip()
-    return prefix + "WITH " + cte + " " + s
-
-
 def _shadow_keyed_documents(sql: str) -> str:
     """Prepend a CTE shadowing ``documents`` with its identity-keyed
     projection (``tables.load_documents_keyed``): NULL ``doc_id`` rows
     dropped in both engines."""
-    return _prepend_cte(
+    return prepend_cte(
         sql,
         "documents AS (SELECT * FROM main.documents"
         " WHERE doc_id IS NOT NULL)",
@@ -1170,7 +1147,7 @@ def _shadow_finite_events(sql: str, shallow_props: bool = False) -> str:
             f", CASE WHEN {_props_depth_sql()}"
             f" <= {PROPS_JSON_MAX_DEPTH} THEN props END AS props"
         )
-    return _prepend_cte(
+    return prepend_cte(
         sql,
         f"events AS (SELECT * REPLACE ({repl}) FROM main.events"
         f" WHERE epoch_us(ts) >= {EVENT_TS_VALID_MIN_US}"

@@ -11,14 +11,37 @@ Parquet scans here are where Catalyst pushdown lands: any filter /
 column selection applied by downstream operators reaches the scan as
 ``PushedFilters`` / pruned ``ReadSchema`` — verified in
 ``tests/test_plans.py``.
+
+Each parquet source is resolved once per process, as Structured
+Streaming's file source takes its schema up front rather than inferring
+it per query. ``parquet_schema`` keeps the schema that Spark inferred
+on the first read, and ``load_table`` reads with
+``spark.read.schema(cached)``, so a warm load launches no inference
+job; ``load_table_cpu`` keeps the scan's split count, so it decides on
+a repartition without planning the scan again. The cache is process-local and bounded (``_RESOLVED_MAX``
+entries, least recently used dropped first). Its key is the source's
+footprint, each file's real path, size, ``mtime_ns`` and a hash of its
+parquet footer (read from the file's tail in Python, no Spark job),
+plus the session confs that change the answer: ``_INFER_CONFS`` for
+the schema; ``defaultParallelism`` and ``_SPLIT_CONFS`` for the split
+count. A rewritten file, a file added to or removed from a directory
+source, or a changed conf therefore misses. A source whose inference
+fails (a TIMESTAMP(NANOS) column: ``PARQUET_TYPE_ILLEGAL``) is never
+cached and fails on every read; one that cannot be stamped locally (a
+missing path, a remote filesystem) is read uncached, as Spark reads it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import threading
+from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -34,8 +57,108 @@ TABLE_NAMES = (
 )
 
 
+#: Session confs that change what parquet schema inference returns.
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+#: Session confs that, with ``defaultParallelism``, size a file scan's
+#: splits (``FilePartition.maxSplitBytes``).
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+_RESOLVED_MAX = 256
+_resolved: OrderedDict[tuple, object] = OrderedDict()
+_resolved_lock = threading.Lock()
+
+
+def _file_stamp(path: str) -> tuple:
+    """(path, size, mtime_ns, footer hash) of one file. The footer is
+    the parquet tail: its length in the 4 bytes before the closing
+    ``PAR1`` magic. A file without that tail hashes as empty."""
+    with open(path, "rb") as f:
+        st = os.fstat(f.fileno())
+        footer = b""
+        if st.st_size >= 12:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            n = int.from_bytes(tail[:4], "little")
+            if tail[4:] == b"PAR1" and n <= st.st_size - 12:
+                f.seek(-8 - n, os.SEEK_END)
+                footer = f.read(n)
+    digest = hashlib.blake2b(footer, digest_size=16).digest()
+    return path, st.st_size, st.st_mtime_ns, digest
+
+
+def _footprint(path: str) -> tuple:
+    """The stamps of every file of a parquet source: the file itself,
+    or each file under a directory. Raises ``OSError`` on a path that
+    is not a local file or directory."""
+    real = os.path.realpath(path)
+    if not os.path.isdir(real):
+        return (_file_stamp(real),)
+    return tuple(
+        _file_stamp(os.path.join(root, f))
+        for root, _, files in sorted(os.walk(real))
+        for f in sorted(files)
+    )
+
+
+def _confs(spark: SparkSession, keys: tuple[str, ...]) -> tuple:
+    return tuple(spark.conf.get(k, None) for k in keys)
+
+
+def _resolve(path: str, key: tuple, compute: Callable[[], object]) -> object:
+    """``compute()`` for the parquet source ``path``, cached under its
+    footprint and ``key`` (the confs and settings the answer depends
+    on). A ``compute`` that raises caches nothing; a path that cannot
+    be stamped is computed uncached."""
+    try:
+        key = (_footprint(path), key)
+    except OSError:
+        return compute()
+    with _resolved_lock:
+        if key in _resolved:
+            _resolved.move_to_end(key)
+            return _resolved[key]
+    value = compute()
+    with _resolved_lock:
+        _resolved[key] = value
+        while len(_resolved) > _RESOLVED_MAX:
+            _resolved.popitem(last=False)
+    return value
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet source ``path`` under
+    ``spark``'s inference confs (``_INFER_CONFS``), inferred once per
+    footprint (see the module docstring)."""
+    return _resolve(
+        path,
+        ("schema", _confs(spark, _INFER_CONFS)),
+        lambda: spark.read.parquet(path).schema,
+    )
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """The fixture table ``name`` of ``sf_dir``; ``events`` through
+    its ingest contract (``clean_measurements``). The schema comes
+    from ``parquet_schema``: inferred on the first load of the file and
+    reused until the file's path, size, ``mtime_ns`` or footer hash, or
+    the session's parquet inference confs (``_INFER_CONFS``), change."""
+    path = _table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = clean_measurements(df)
     return df
@@ -131,6 +254,33 @@ def clean_measurements(df: DataFrame) -> DataFrame:
     return df.withColumn("value", F.when(finite, c))
 
 
+def prepend_cte(sql: str, cte: str) -> str:
+    """Make ``cte`` the first CTE of the DuckDB oracle ``sql``, merged
+    into its own ``WITH`` / ``WITH RECURSIVE`` when it has one: the one
+    splice of the oracle shadows that mirror this module's ingest
+    contracts (``registry._shadow_finite_events``,
+    ``registry._shadow_keyed_documents``,
+    ``similarity._shadow_nonnull_embeddings``). Leading ``-- ...``
+    comment lines are kept ahead of it and skipped for the prefix
+    checks: a comment-prefixed ``WITH x AS ...`` oracle would otherwise
+    miss the startswith and get a second WITH injected ahead of it
+    (hard binder error; round-8 review)."""
+    lines = sql.lstrip().splitlines()
+    head = []
+    while lines and lines[0].lstrip().startswith("--"):
+        head.append(lines.pop(0))
+    s = "\n".join(lines).lstrip()
+    prefix = ("\n".join(head) + "\n") if head else ""
+    if s.upper().startswith("WITH RECURSIVE"):
+        return (
+            prefix + "WITH RECURSIVE " + cte + ", "
+            + s[len("WITH RECURSIVE"):].lstrip()
+        )
+    if s.upper().startswith("WITH"):
+        return prefix + "WITH " + cte + ", " + s[len("WITH"):].lstrip()
+    return prefix + "WITH " + cte + " " + s
+
+
 def ts_timestamp(col: str = "ts") -> Column:
     """A timestamp[us] column (read as TIMESTAMP_NTZ) as a TIMESTAMP,
     cast through the session timezone, which ``op_session`` pins to
@@ -159,10 +309,20 @@ def load_table_cpu(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     decision on a real 100 TB layout where file count already exceeds
     core count — there the scan arrives with ample partitions and we
     skip the repartition entirely.
+
+    The scan's split count is planned once and kept, keyed like
+    ``load_table``'s schema by the file's footprint, plus
+    ``defaultParallelism`` and the split-size confs (``_SPLIT_CONFS``):
+    a rewritten file or a changed core count or split size plans again.
     """
     df = load_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    splits = _resolve(
+        _table_path(sf_dir, name),
+        ("splits", target, _confs(spark, _SPLIT_CONFS)),
+        lambda: df.rdd.getNumPartitions(),
+    )
+    if splits < target:
         df = df.repartition(target)
     return df
 
@@ -211,7 +371,7 @@ BCAST_SRC_CAP_BYTES = 64 << 20
 
 
 def _source_bytes(sf_dir: str, table: str) -> int:
-    path = os.path.join(sf_dir, f"{table}.parquet")
+    path = _table_path(sf_dir, table)
     try:
         if os.path.isdir(path):
             return sum(

@@ -40,6 +40,7 @@ import tempfile
 import time
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -47,7 +48,9 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from ..operators.stats import STAT_COLS, running_stats, stats_oracle_sql
 from ..sources.tables import (
     PARTITION_KEY_MAX_BYTES,
+    clean_measurements,
     load_table,
+    parquet_schema,
     partitionable_key,
     ts_micros,
     ts_timestamp,
@@ -142,9 +145,10 @@ def events_file_stream(
     It serves any table (events, documents, orders, ...): ``path`` may
     be a single parquet file (staged into a dir) or a directory of
     parts. ``copies`` stages the source N times (N full passes) for
-    replay-shaped tests. The stream schema is read from the parquet
-    footer, so a timestamp streams as the table's timestamp[us] column,
-    as ``load_table`` reads it.
+    replay-shaped tests. The stream schema is ``load_table``'s, from
+    the same resolver (``tables.parquet_schema``): inferred once per
+    file footprint, so a timestamp streams as the table's timestamp[us]
+    column and a warm stream start launches no inference job.
 
     A multi-part directory is ALWAYS re-staged with forced mtimes —
     the source orders batches by ms-granularity mtime, not name, so a
@@ -154,7 +158,7 @@ def events_file_stream(
     sets maxFilesPerTrigger to the per-pass part count so ops with
     per-BATCH output contracts (progress counters, per-batch folds)
     see one batch per full pass regardless of the physical layout."""
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     parts = _parquet_parts(path)
     path = _stage_stream_dir(*(parts * copies), force_order=len(parts) > 1)
     stream = (
@@ -165,8 +169,6 @@ def events_file_stream(
     # streaming twin of load_table's events ingest contract
     # (sources/tables.py clean_measurements): identity on a table with
     # no ts or value column
-    from ..sources.tables import clean_measurements
-
     return clean_measurements(stream)
 
 
@@ -207,6 +209,36 @@ def kafka_record(stats_df: DataFrame) -> DataFrame:
     )
 
 
+#: Longest wait, after a query's ``stop()``, for the tasks of the batch
+#: it interrupted to end.
+STOP_WAIT_S = 10.0
+
+
+def _await_stopped(q: StreamingQuery) -> None:
+    """Wait, at most ``STOP_WAIT_S``, until no stage of an unfinished
+    job in ``q``'s run-id job group (Spark runs each batch of a query
+    under it) is active or still runs a task. ``stop()`` interrupts
+    the running batch but can return before its tasks end, and a
+    stateful task can still write its state-store ``.delta`` file:
+    a checkpoint removed before then is recreated by that write."""
+    tracker = SparkContext.getOrCreate().statusTracker()
+    deadline = time.monotonic() + STOP_WAIT_S
+    while time.monotonic() < deadline:
+        active = set(tracker.getActiveStageIds())
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(q.runId)]
+        stages = [
+            s for job in jobs
+            if job is not None and job.status != "SUCCEEDED"
+            for s in job.stageIds
+        ]
+        if not any(
+            s in active or getattr(tracker.getStageInfo(s), "numActiveTasks", 0)
+            for s in stages
+        ):
+            return
+        time.sleep(0.05)
+
+
 def _drain(
     writer: DataStreamWriter,
     *,
@@ -222,7 +254,9 @@ def _drain(
     ``until``, by polling it every 0.5 s: a query that dies meanwhile
     raises its own exception, and one that never satisfies ``until``
     raises ``TimeoutError`` after 120 s. The query is stopped on every
-    path; the stopped query is returned (``recentProgress`` etc.).
+    path, and its interrupted batch's tasks are waited for
+    (``_await_stopped``) before the checkpoint is removed; the stopped
+    query is returned (``recentProgress`` etc.).
     """
     own_ckpt = [] if checkpoint_dir else [_tracked_tmp_dir("sgs_ckpt")]
     trigger = trigger or {"availableNow": True}
@@ -250,6 +284,7 @@ def _drain(
                     time.sleep(0.5)
         finally:
             q.stop()
+            _await_stopped(q)
     finally:
         _cleanup_tmp_dirs(own_ckpt)
     return q

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.stats import running_stats, stats_oracle_sql
+from ..sources.tables import load_table
 from .pipelines import (
     _cleanup_tmp_dirs,
     _run_to_memory,
@@ -56,11 +57,7 @@ def ckpt_state_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     its complete-mode output must equal the full-stream aggregate —
     i.e. per-key state really was restored, not recomputed.
     """
-    from ..sources.tables import clean_measurements
-
-    events = clean_measurements(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    )
+    events = load_table(spark, sf_dir, "events")
 
     src_dir = _tracked_tmp_dir("sgs_ckpt_src")
     stage_dir = _tracked_tmp_dir("sgs_ckpt_stage")

@@ -432,7 +432,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final row per key equals the batch answer regardless of how
     many heartbeats fired, so the batch oracle applies unchanged
     (``delta``, the order-dependent telemetry, is excluded)."""
-    from ..sources.tables import clean_measurements
+    from ..sources.tables import load_table
     from .pipelines import _run_to_memory, events_file_stream
 
     events = events_file_stream(spark, os.path.join(sf_dir, "events.parquet"))
@@ -451,9 +451,7 @@ def stream_stats_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only come from a heartbeat.
     expected = {
         r["readTag_id"]: r["exp_counter"]
-        for r in clean_measurements(
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        )
+        for r in load_table(spark, sf_dir, "events")
         .groupBy(F.col("event_type").cast("string").alias("readTag_id"))
         .agg(F.count("value").cast("double").alias("exp_counter"))
         .collect()

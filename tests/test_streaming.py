@@ -111,6 +111,52 @@ def test_poll_drained_stream_raises_its_own_error(spark, monkeypatch):
     assert made and not any(os.path.exists(d) for d in made)
 
 
+def test_stopped_heartbeat_streams_leave_no_tmp_dir(spark, sf_dir, monkeypatch):
+    """``stream_stats_heartbeat`` is stopped mid-run by its poll (a
+    processing-time stateful query): a state-store task of the batch
+    that ``stop()`` interrupted must end before ``_drain`` removes the
+    checkpoint, or its late ``.delta`` write recreates the dir. Five
+    runs: when ``_drain`` returns, no stage of the query's unfinished
+    jobs may be active or running a task; and once the staged sources
+    are removed too (as at process exit), none of the dirs the runs
+    made may be left."""
+    import time
+
+    import spark_streaming_stream_analyzer_spark.streaming.pipelines as sp
+    from spark_streaming_stream_analyzer_spark import registry
+
+    made, busy = [], []
+    real_dir, real_drain = sp._tracked_tmp_dir, sp._drain
+    tracker = spark.sparkContext.statusTracker()
+
+    def tracked(prefix):
+        made.append(real_dir(prefix))
+        return made[-1]
+
+    def drain(*args, **kwargs):
+        q = real_drain(*args, **kwargs)
+        active = set(tracker.getActiveStageIds())
+        for j in tracker.getJobIdsForGroup(q.runId):
+            job = tracker.getJobInfo(j)
+            if job is not None and job.status != "SUCCEEDED":
+                busy.extend(
+                    (j, s) for s in job.stageIds
+                    if s in active or getattr(tracker.getStageInfo(s), "numActiveTasks", 0)
+                )
+        return q
+
+    monkeypatch.setattr(sp, "_tracked_tmp_dir", tracked)
+    monkeypatch.setattr(sp, "_drain", drain)
+    for _ in range(5):
+        assert registry.QUERIES["stream_stats_heartbeat"](spark, sf_dir).count() > 0
+    assert busy == []
+    assert sum("sgs_ckpt_" in d for d in made) == 5
+    # the staged sources: still tracked, unlike the removed checkpoints
+    sp._cleanup_tmp_dirs([d for d in made if d in sp._TMP_DIRS])
+    time.sleep(1)
+    assert [d for d in made if os.path.exists(d)] == []
+
+
 def test_foreachbatch_per_batch_wordcount(spark, tmp_path):
     """Q2: the reference's word count resets every micro-batch — that
     scoping is only expressible via foreachBatch; totals across batches

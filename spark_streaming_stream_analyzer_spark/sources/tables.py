@@ -18,17 +18,18 @@ it per query. ``parquet_schema`` keeps the schema that Spark inferred
 on the first read, and ``load_table`` reads with
 ``spark.read.schema(cached)``, so a warm load launches no inference
 job; ``load_table_cpu`` keeps the scan's split count, so it decides on
-a repartition without planning the scan again. The cache is process-local and bounded (``_RESOLVED_MAX``
-entries, least recently used dropped first). Its key is the source's
-footprint, each file's real path, size, ``mtime_ns`` and a hash of its
-parquet footer (read from the file's tail in Python, no Spark job),
-plus the session confs that change the answer: ``_INFER_CONFS`` for
-the schema; ``defaultParallelism`` and ``_SPLIT_CONFS`` for the split
-count. A rewritten file, a file added to or removed from a directory
-source, or a changed conf therefore misses. A source whose inference
-fails (a TIMESTAMP(NANOS) column: ``PARQUET_TYPE_ILLEGAL``) is never
-cached and fails on every read; one that cannot be stamped locally (a
-missing path, a remote filesystem) is read uncached, as Spark reads it.
+a repartition without planning the scan again. The cache is
+process-local and bounded (``_RESOLVED_MAX`` entries, least recently
+used dropped first). Its key is the source's footprint, each file's
+real path, size, ``mtime_ns`` and a hash of its parquet footer (read
+from the file's tail in Python, no Spark job), plus the session confs
+that change the answer: ``_INFER_CONFS`` for the schema;
+``defaultParallelism`` and ``_SPLIT_CONFS`` for the split count. A
+rewritten file, a file added to or removed from a directory source, or
+a changed conf therefore misses. A source whose inference fails (a
+TIMESTAMP(NANOS) column: ``PARQUET_TYPE_ILLEGAL``) is never cached and
+fails on every read; one that cannot be stamped locally (a missing
+path, a remote filesystem) is read uncached, as Spark reads it.
 """
 
 from __future__ import annotations
